@@ -356,8 +356,8 @@ def q_dedup_jaccard(spark, sf_dir):
 
 def q_ann_topk(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    # dim=64 routes the cosine through the unrolled codegen chain
-    # (bit-identical to the interpreted fold; see text_norm)
+    # a known dim routes the pair cosine through the Arrow pandas UDF
+    # ann._cos_pd (bit-identical to the interpreted SQL fold)
     return ann.cosine_topk(emb.filter(F.col("vec_id") < 50), emb, k=5, dim=64)
 
 

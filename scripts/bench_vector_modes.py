@@ -2,6 +2,9 @@
 (r4 verdict item #6): vocab_broadcast_threshold defaulted to 2M terms
 on an argument, not a measurement.
 
+Each layout is forced through the threshold itself: above the
+vocabulary size keeps the broadcast source, 0 forces pre-joined.
+
 Method: the fixture ontology pair provides a FIXED candidate/feature
 workload; the vocabulary is inflated independently through the P2
 label map (V labels for ids that never occur in the triples — they
@@ -11,12 +14,14 @@ delta isolates vocabulary handling: collect+driver-embed+broadcast vs
 distributed rank+embed-UDF+prejoin).
 
 Usage: python scripts/bench_vector_modes.py [V1,V2,...] (default
-250000,1000000,3000000), 2 runs per (V, mode), best reported.
+250000,1000000,3000000), 2 runs per (V, mode), best reported. The
+session takes every core this process may run on (nproc).
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -38,7 +43,7 @@ def main() -> None:
         if len(sys.argv) > 1
         else [250_000, 1_000_000, 3_000_000]
     )
-    spark = get_spark("bench_vec_modes", cores=32)
+    spark = get_spark("bench_vec_modes", cores=len(os.sched_getaffinity(0)))
     pair = datagen.make_ontology_pair(seed=42)
     tdf = spark.createDataFrame(pair["triples"], TRIPLES_SCHEMA)
     tdf = tdf.localCheckpoint(eager=True)
@@ -56,18 +61,18 @@ def main() -> None:
         )
         label_map.count()
         cell = {}
-        for mode in ("broadcast", "prejoined"):
+        for mode, threshold in (("broadcast", 20_000_000), ("prejoined", 0)):
             best = None
             for _ in range(2):
-                cfg = PipelineConfig(
-                    vector_mode=mode, vocab_broadcast_threshold=20_000_000
-                )
+                cfg = PipelineConfig(vocab_broadcast_threshold=threshold)
                 t0 = time.time()
                 res = run_pipeline(
                     spark, triples=tdf, config=cfg, label_map=label_map
                 )
                 n_acc = res["accepted"].count()
                 dt = time.time() - t0
+                if res["vector_mode"] != mode:
+                    raise RuntimeError(f"threshold {threshold} ran {res['vector_mode']}")
                 timings = res.get("unstaged_timings", {})
                 rec = {
                     "wall_sec": round(dt, 2),

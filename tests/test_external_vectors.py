@@ -52,14 +52,15 @@ def test_external_vectors_reproduce_stub_prejoined(
 ):
     base = run_pipeline(
         spark, triples=triples_sdf,
-        config=PipelineConfig(vector_mode="prejoined"),
+        config=PipelineConfig(vocab_broadcast_threshold=0),
     )
     ext = run_pipeline(
         spark, triples=triples_sdf,
         config=PipelineConfig(
-            vector_mode="prejoined", external_vectors=exported_vectors
+            vocab_broadcast_threshold=0, external_vectors=exported_vectors
         ),
     )
+    assert ext["vector_mode"] == "prejoined"
     assert _scored_set(base) == _scored_set(ext)
 
 

@@ -1,5 +1,5 @@
-"""Pre-joined-vector scoring path (distributed vocabulary, no driver
-collect / no matrix broadcast): bit-equality with the broadcast path,
+"""Pre-joined vector source (distributed vocabulary, no driver
+collect / no matrix broadcast): equality with the broadcast source,
 and plan checks that the scale-killers named in round-1 review are
 gone (no single-partition Exchange in index assignment)."""
 
@@ -19,14 +19,18 @@ def _scores(result) -> dict:
     }
 
 
+# the layout follows the vocabulary probe: a threshold above the
+# fixture's vocabulary keeps the broadcast source, 0 forces pre-joined
+BROADCAST = PipelineConfig(vocab_broadcast_threshold=10_000_000)
+PREJOINED = PipelineConfig(vocab_broadcast_threshold=0)
+
+
 @pytest.fixture(scope="module")
 def both_paths(spark, transcripts_sdf):
-    broadcast = run_pipeline(
-        spark, transcripts_sdf, PipelineConfig(vector_mode="broadcast")
-    )
-    prejoined = run_pipeline(
-        spark, transcripts_sdf, PipelineConfig(vector_mode="prejoined")
-    )
+    broadcast = run_pipeline(spark, transcripts_sdf, BROADCAST)
+    prejoined = run_pipeline(spark, transcripts_sdf, PREJOINED)
+    assert broadcast["vector_mode"] == "broadcast"
+    assert prejoined["vector_mode"] == "prejoined"
     return broadcast, prejoined
 
 
@@ -135,11 +139,11 @@ def test_pr_curve_small_path_equals_scale_path(spark):
 def test_auto_routes_big_vocab_to_prejoined_without_collect(
     spark, transcripts_sdf, monkeypatch
 ):
-    """vector_mode='auto' (the default) must never collect an over-
-    threshold vocabulary to the driver: with the broadcast threshold
-    forced below the fixture's term count, the pipeline routes to the
-    pre-joined path — proven by poisoning EmbBroadcast.from_terms (the
-    only consumer of the driver collect)."""
+    """The pipeline must never collect an over-threshold vocabulary to
+    the driver: with the broadcast threshold forced below the
+    fixture's term count, it routes to the pre-joined path — proven by
+    poisoning EmbBroadcast.from_terms (the only consumer of the driver
+    collect)."""
 
     def boom(*a, **k):  # pragma: no cover - must not be reached
         raise AssertionError("driver collect on an over-threshold vocabulary")
@@ -148,16 +152,41 @@ def test_auto_routes_big_vocab_to_prejoined_without_collect(
     res = run_pipeline(
         spark,
         transcripts_sdf,
-        PipelineConfig(vector_mode="auto", vocab_broadcast_threshold=1),
+        PipelineConfig(vocab_broadcast_threshold=1),
     )
     assert res["vector_mode"] == "prejoined"
     assert res["accepted"].count() > 0
 
 
-def test_explicit_broadcast_over_threshold_raises(spark, transcripts_sdf):
-    with pytest.raises(ValueError, match="vocab_broadcast_threshold"):
-        run_pipeline(
-            spark,
-            transcripts_sdf,
-            PipelineConfig(vector_mode="broadcast", vocab_broadcast_threshold=1),
+def test_sources_agree_on_labels_and_direct_routes(spark, edge_case_tables):
+    """score_candidates_stage (via run_pipeline) on both vector sources
+    over the synthetic pair with coded ids relabeled by the label map,
+    a concept without features and a property without domain+range
+    context: label substitution and the direct route run on both
+    layouts, with scores equal to 1e-12 and identical accepted sets."""
+    t = edge_case_tables
+
+    def run(cfg):
+        return run_pipeline(
+            spark, triples=t["triples"], concepts=t["concepts"], props=t["props"],
+            label_map=t["labels"], config=cfg,
         )
+
+    rb, rp = run(BROADCAST), run(PREJOINED)
+    assert (rb["vector_mode"], rp["vector_mode"]) == ("broadcast", "prejoined")
+    sb, sp = _scores(rb), _scores(rp)
+    assert set(sb) == set(sp)
+    diff = [k for k in sb if abs(sb[k] - sp[k]) > 1e-12]
+    assert not diff, diff[:5]
+    # the cases under test are really scored
+    assert any(k[0] == "src1#OrphanConcept" and not k[2] for k in sb)
+    assert any(k[0] == "src1#rel_OrphanLink" and k[2] for k in sb)
+
+    def accepted(res):
+        return {(r["ent1"], r["ent2"]) for r in res["accepted"].collect()}
+
+    ab, ap = accepted(rb), accepted(rp)
+    assert ab == ap
+    # coded ids match their counterparts only through their labels
+    coded = {f"src2#{c}" for c in t["codes"].values()}
+    assert len({e2 for _, e2 in ab} & coded) == len(coded), ab

@@ -221,3 +221,62 @@ def test_tune_threshold_equals_driver_sweep(spark):
     thr2, f12 = tr.f1_sweep(pdf["score"].to_numpy(), pdf["y"].to_numpy())
     assert f1 == pytest.approx(f12, abs=1e-9), (f1, f12)
     assert thr == pytest.approx(thr2, abs=1e-9), (thr, thr2)
+
+
+def test_full_pool_scores_equal_kernel_rescore(spark, edge_case_tables):
+    """Reference-free: prepare_training over the synthetic pair (coded
+    ids named only by the label map, a feature-less concept, a
+    context-less property) and full_pool_scores over its whole labeled
+    pool. Every pair — concept and property, context and direct route
+    — equals kernel_np re-scoring the prep's own encoded indices."""
+    from veealign_spark.plans import train_oaei
+    from veealign_spark.plans.pipeline import PipelineConfig
+
+    t = edge_case_tables
+    tables = {k: t[k] for k in ("triples", "concepts", "props", "labels")}
+    pair_df = spark.createDataFrame([("src1", "src2")], "src1 string, src2 string")
+    cfg = PipelineConfig()
+    # no negative cap: the collected maps then cover every pool key
+    prep = train_oaei.prepare_training(
+        spark, tables, cfg, t["gold"], pair_df, max_false=10**6
+    )
+    params = prep["base_params"]
+    scores_df, _ = train_oaei.full_pool_scores(prep, params)
+    got = {(r["ent1"], r["ent2"]): r["score"] for r in scores_df.collect()}
+
+    mat, node = prep["mat"], prep["node_map"]
+    enc, encp = prep["enc_map"], prep["encp_map"]
+    shape = (prep["max_types"], cfg.max_paths, cfg.max_pathlen)
+    want, direct = {}, []
+
+    def pairs(df):
+        return [(r["ent1"], r["ent2"]) for r in df.select("ent1", "ent2").collect()]
+
+    cpool = pairs(prep["lab_c_full"])
+    ctx = [k for k in cpool if k[0] in enc and k[1] in enc]
+    direct += [k for k in cpool if not (k[0] in enc and k[1] in enc)]
+    n_cdirect = len(direct)
+    if ctx:
+        nodes = np.array([[enc[a][0], enc[b][0]] for a, b in ctx])
+        feats = np.stack(
+            [np.stack([enc[a][1], enc[b][1]]).reshape(2, *shape) for a, b in ctx]
+        )
+        want.update(zip(ctx, kernel_np.score_concept_pairs(nodes, feats, mat, params)))
+    ppool = pairs(prep["lab_p_full"])
+    pctx = [k for k in ppool if k[0] in encp and k[1] in encp]
+    direct += [k for k in ppool if not (k[0] in encp and k[1] in encp)]
+    M = len(next(iter(encp.values()))[1])
+    pf = np.zeros((len(pctx), 2, 3, M), dtype=np.int64)
+    for i, keys in enumerate(pctx):
+        for side, key in enumerate(keys):
+            s, d, r = encp[key]
+            pf[i, side, 0, 0], pf[i, side, 1], pf[i, side, 2] = s[0], d, r
+    want.update(zip(pctx, kernel_np.score_property_pairs(pf, mat, params)))
+    v1 = mat[[node[a] for a, _ in direct]]
+    v2 = mat[[node[b] for _, b in direct]]
+    want.update(zip(direct, kernel_np.direct_cosine(v1, v2)))
+
+    assert 0 < n_cdirect < len(direct) and ctx and pctx  # all four routes ran
+    assert set(got) == set(want)
+    bad = [k for k in want if abs(got[k] - want[k]) > 1e-12]
+    assert not bad, bad[:5]

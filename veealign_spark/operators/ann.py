@@ -27,12 +27,6 @@ from pyspark.sql import functions as F
 from veealign_spark.functions.text_norm import cosine_expr
 
 
-def _norm2(c):
-    return F.sqrt(
-        F.aggregate(c, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Vectorized (Arrow) pair scoring — bit-identical to the SQL fold.
 #

@@ -219,15 +219,3 @@ def blocked_candidates_multi(
         )
         .dropDuplicates()
     )
-
-
-def label_candidates(candidates: DataFrame, gold: DataFrame) -> DataFrame:
-    """J3: left-join gold labels; unmatched gold pairs surfaced via
-    anti-join (the reference warns on them, data_preprocessing.py:
-    74-82). Returns candidates + y:boolean."""
-    g = gold.select("ent1", "ent2").withColumn("y", F.lit(True))
-    return candidates.join(g, ["ent1", "ent2"], "left").fillna(False, ["y"])
-
-
-def unmatched_gold(candidates: DataFrame, gold: DataFrame) -> DataFrame:
-    return gold.join(candidates, ["ent1", "ent2"], "left_anti")

@@ -73,12 +73,6 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
     )
 
 
-def _union_find_rows(rows, spark) -> DataFrame:
-    return _union_find_pairs(
-        [r["ent1"] for r in rows], [r["ent2"] for r in rows], spark
-    )
-
-
 def _union_find_pairs(e1: list, e2: list, spark) -> DataFrame:
     parent: dict[str, str] = {}
 

@@ -1,31 +1,40 @@
 """Distributed pair scoring — the dual-attention kernel as a Spark
 operator (K1-K10; SURVEY.md §2.8).
 
-Dataflow: candidates (ent1, ent2) are hash-joined to the nested
-per-entity feature table (J6), then streamed through a single
-`mapInPandas` over Arrow batches. Per batch, ragged string contexts
-are normalized, resolved to embedding indices (J5 "embedify" — the
-KeyError fallback of train.py:384-397 becomes the null-features direct
-route, A6), padded to the dense [B, 2, T, P, L] layout (K10), and
-scored with the pure-numpy kernel (kernel_np, K1-K9).
+Dataflow: contexts are encoded JVM-side into fixed-shape arrays
+(encode_features / encode_prop_contexts — J5 "embedify" as a join
+against the vocabulary, label substitution P2 included), candidates
+(ent1, ent2) are hash-joined to the per-key encoded table once per
+side (J6), and one `mapInPandas` per entity kind streams the Arrow
+batches through the pure-numpy kernel (kernel_np, K1-K9). Strings
+never cross into Python. A pair with a context-less side takes the
+direct raw-name-cosine route (A6, the KeyError fallback of
+train.py:384-397).
 
-The embedding matrix + term indexer and the frozen kernel params ride
-a SparkContext broadcast (the reference's frozen nn.Embedding,
-train.py:248-250, was the same idea single-node). At a vocabulary too
-large to broadcast, the scale path is pre-joining vec arrays onto the
-exploded contexts instead — see build_embeddings_table, which already
-materializes that dim table distributedly.
+Where a token's vector comes from is a VectorSource, chosen by
+vocabulary size (PipelineConfig.vocab_broadcast_threshold):
 
-No per-row Python: everything crosses into Python only as Arrow
-batches (input_hint requirement).
+- broadcast: the (indexer, matrix) pair rides a SparkContext
+  broadcast (the reference's frozen nn.Embedding, train.py:248-250,
+  was the same idea single-node). Encoders resolve int64 indices;
+  executors gather matrix rows.
+- pre-joined: the vectors themselves are joined from the distributed
+  dim table (build_embeddings_table) — no driver collect, no
+  broadcast, unbounded vocabulary; the rows carry d times the bytes.
+
+Both sources feed the same kernel entry points with the same float64
+vectors, so the two layouts agree to within ~1 ulp (BLAS accumulation
+order can differ with batch shape) — asserted by tests/test_prejoined.py.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -232,34 +241,42 @@ def external_vec_map(external: DataFrame, keys: list[str], dim: int | None = Non
     return {r["key"]: np.asarray(r["vec"], dtype=np.float64) for r in rows}
 
 
+def refresh_embeddings(
+    existing: DataFrame | None, new_terms: DataFrame, dim: int
+) -> DataFrame:
+    """S3 embedding-cache merge: embed only terms absent from the
+    existing dim table (the reference's pickle-cache merge loop,
+    train.py:72-87, as an anti-join + union). `new_terms` has a
+    single `term` column (raw); existing follows EMBEDDINGS schema
+    minus idx (key, vec)."""
+    norm_terms = (
+        new_terms.select(norm_label_col(F.col("term")).alias("key"))
+        .filter(F.col("key") != "")
+        .distinct()
+    )
+    embed = embed_udf_factory(dim)
+    if existing is None:
+        fresh = norm_terms
+        base = None
+    else:
+        base = existing.select("key", "vec")
+        fresh = norm_terms.join(base.select("key"), "key", "left_anti")
+    fresh_emb = fresh.withColumn("vec", embed(F.col("key")))
+    merged = fresh_emb if base is None else base.unionByName(fresh_emb)
+    return scalable_rank(merged, "key")
+
+
 class EmbBroadcast:
     """(indexer, matrix) broadcast pair. Row 0 is the zero UNK row.
 
-    BOTH constructors pull the full vocabulary to the driver — that is
-    the broadcast layout's defining constraint, bounded by
-    PipelineConfig.vocab_broadcast_threshold (vector_mode="auto"
-    switches to the pre-joined path above it; see the module banner).
+    from_terms holds the full vocabulary on the driver — that is the
+    broadcast layout's defining constraint, bounded by
+    PipelineConfig.vocab_broadcast_threshold (above it the pipeline
+    builds the pre-joined source instead; see the module banner).
     """
 
-    def __init__(self, spark: SparkSession, emb_df: DataFrame, max_rows: int = 5_000_000):
-        # limit-probe guard: costs one early-terminating job instead of
-        # a full count (which would compute the whole embed-UDF plan
-        # twice — once for the count, once for the toPandas)
-        if emb_df.limit(max_rows + 1).count() > max_rows:
-            raise ValueError(
-                f"EmbBroadcast over more than {max_rows} terms would "
-                "collect the whole vocabulary to the driver — use the "
-                "pre-joined path (vector_mode='prejoined') instead"
-            )
-        pdf = emb_df.select("key", "idx", "vec").toPandas().sort_values("idx")
-        vocab = pdf["key"].tolist()
-        dim = len(pdf["vec"].iloc[0]) if len(pdf) else 32
-        mat = np.zeros((len(vocab) + 1, dim), dtype=np.float64)
-        for i, v in zip(pdf["idx"], pdf["vec"]):
-            mat[int(i)] = np.asarray(v, dtype=np.float64)
-        indexer = {k: int(i) for k, i in zip(pdf["key"], pdf["idx"])}
-        sc = spark.sparkContext
-        self.bc = sc.broadcast({"indexer": indexer, "matrix": mat})
+    def __init__(self, bc):
+        self.bc = bc
 
     @classmethod
     def from_terms(
@@ -273,8 +290,9 @@ class EmbBroadcast:
         if len(terms) > max_rows:
             raise ValueError(
                 f"EmbBroadcast.from_terms over {len(terms)} terms exceeds "
-                f"max_rows={max_rows} — use the pre-joined path "
-                "(vector_mode='prejoined') instead"
+                f"max_rows={max_rows} — route this vocabulary to the "
+                "pre-joined source (PipelineConfig.vocab_broadcast_threshold "
+                "below the vocabulary size) instead"
             )
         keys = sorted({normalize_term(t) for t in terms} - {""})
         mat = np.vstack([np.zeros((1, dim)), embed_terms_np(keys, dim)])
@@ -284,191 +302,99 @@ class EmbBroadcast:
                 v = ext.get(k)
                 if v is not None:
                     mat[i + 1] = v
-        obj = cls.__new__(cls)
-        obj.bc = spark.sparkContext.broadcast(
+        return cls(spark.sparkContext.broadcast(
             {"indexer": {k: i + 1 for i, k in enumerate(keys)}, "matrix": mat}
+        ))
+
+
+@dataclass(eq=False)
+class VectorSource:
+    """Where a token's embedding comes from — the only thing the two
+    layouts differ in. `table` maps a normalized term (`norm`) to `val`.
+
+    - broadcast (`bc` set): `val` is the int64 row of the broadcast
+      matrix. The table is broadcast-joined, the pad is index 0 (the
+      zero row), Arrow carries int64 index arrays and each executor
+      gathers matrix rows.
+    - pre-joined (`bc` None): `val` is the vector itself, from the
+      distributed build_embeddings_table; it is plain-joined, the pad
+      is the zero vector, and Arrow carries the flattened vectors.
+    """
+
+    table: DataFrame
+    dim: int
+    bc: Broadcast | None = None
+
+    @classmethod
+    def broadcast(cls, spark: SparkSession, emb: EmbBroadcast) -> "VectorSource":
+        state = emb.bc.value
+        table = spark.createDataFrame(
+            list(state["indexer"].items()), "norm string, val long"
         )
-        return obj
+        return cls(table, state["matrix"].shape[1], emb.bc)
 
+    @classmethod
+    def prejoined(cls, emb_table: DataFrame, dim: int) -> "VectorSource":
+        # lazy localCheckpoint: every lookup reads one computation of
+        # the embed UDF instead of re-running it per consumer plan
+        table = emb_table.select(F.col("key").alias("norm"), F.col("vec").alias("val"))
+        return cls(table.localCheckpoint(eager=False), dim)
 
-def _local(key: str) -> str:
-    return key.split("#", 1)[1] if "#" in key else key
+    @property
+    def val_type(self) -> str:
+        return "long" if self.bc is not None else "array<double>"
 
+    def pad(self):
+        return F.lit(0) if self.bc is not None else F.array_repeat(F.lit(0.0), self.dim)
 
-def _resolve(tok: str, indexer: dict, cache: dict) -> int:
-    idx = cache.get(tok)
-    if idx is None:
-        idx = indexer.get(normalize_term(_local(tok)), 0)
-        cache[tok] = idx
-    return idx
-
-
-def _features_to_tensor(
-    col: pd.Series, indexer: dict, cache: dict, T: int, P: int, L: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Ragged [T][P][L] string features -> dense int index tensor,
-    plus a mask of rows that had no features at all (direct route)."""
-    B = len(col)
-    out = np.zeros((B, T, P, L), dtype=np.int64)
-    missing = np.zeros(B, dtype=bool)
-    for b, f in enumerate(col):
-        if f is None or (isinstance(f, float) and pd.isna(f)):
-            missing[b] = True
-            continue
-        for t in range(min(T, len(f))):
-            paths = f[t]
-            if paths is None:
-                continue
-            for pi in range(min(P, len(paths))):
-                path = paths[pi]
-                for li in range(min(L, len(path))):
-                    out[b, t, pi, li] = _resolve(path[li], indexer, cache)
-    return out, missing
-
-
-def score_concept_candidates(
-    candidates: DataFrame,
-    features: DataFrame,
-    emb_bc: EmbBroadcast,
-    params: KernelParams,
-    max_types: int = 4,
-) -> DataFrame:
-    """Score concept pairs -> (ent1, ent2, score). Null-feature rows
-    take the direct raw-name-cosine route (A6, reference *intent*
-    semantics — Quirk Q3 resolved to sim >= threshold)."""
-    f = features.select(
-        F.concat_ws("#", "src", "entity").alias("key"), F.col("features")
-    )
-    joined = (
-        candidates.join(f.withColumnRenamed("key", "ent1").withColumnRenamed("features", "f1"), "ent1", "left")
-        .join(f.withColumnRenamed("key", "ent2").withColumnRenamed("features", "f2"), "ent2", "left")
-        .select("ent1", "ent2", "f1", "f2")
-    )
-    bc = emb_bc.bc
-    p_dict = params.to_dict()
-    T, P, L = max_types, params.max_paths, params.max_pathlen
-
-    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = bc.value
-        indexer, mat = state["indexer"], state["matrix"]
-        p = KernelParams.from_dict(p_dict)
-        cache: dict = {}
-        for pdf in batches:
-            B = len(pdf)
-            if B == 0:
-                continue
-            n1 = np.array([_resolve(k, indexer, cache) for k in pdf["ent1"]])
-            n2 = np.array([_resolve(k, indexer, cache) for k in pdf["ent2"]])
-            f1, miss1 = _features_to_tensor(pdf["f1"], indexer, cache, T, P, L)
-            f2, miss2 = _features_to_tensor(pdf["f2"], indexer, cache, T, P, L)
-            direct = miss1 | miss2
-            scores = np.zeros(B, dtype=np.float64)
-            if (~direct).any():
-                nodes = np.stack([n1[~direct], n2[~direct]], axis=1)
-                feats = np.stack([f1[~direct], f2[~direct]], axis=1)
-                scores[~direct] = kernel_np.score_concept_pairs(
-                    nodes, feats, mat, p
-                )
-            if direct.any():
-                scores[direct] = kernel_np.direct_cosine(
-                    mat[n1[direct]], mat[n2[direct]]
-                )
-            yield pd.DataFrame(
-                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": scores}
-            )
-
-    return joined.mapInPandas(score_fn, "ent1 string, ent2 string, score double")
-
-
-def score_prop_candidates(
-    candidates: DataFrame,
-    prop_contexts: DataFrame,
-    emb_bc: EmbBroadcast,
-    params: KernelParams,
-    max_prop_len: int = 16,
-) -> DataFrame:
-    """Score property pairs (K9): sum-pooled (self, domains, ranges)
-    cosine mixture (train.py:339-346)."""
-    pc = prop_contexts.select(
-        F.concat_ws("#", "src", "prop").alias("key"), "domains", "ranges"
-    )
-    joined = (
-        candidates.join(
-            pc.select(
-                F.col("key").alias("ent1"),
-                F.col("domains").alias("d1"),
-                F.col("ranges").alias("r1"),
-            ),
-            "ent1",
-            "left",
+    def lookup(self, df: DataFrame, *keep: str, out: str = "val") -> DataFrame:
+        """`keep` columns of df plus its `norm` resolved to `out` (pad
+        when the term is out of vocabulary)."""
+        t = F.broadcast(self.table) if self.bc is not None else self.table
+        return df.join(t, "norm", "left").select(
+            *keep, F.coalesce("val", self.pad()).alias(out)
         )
-        .join(
-            pc.select(
-                F.col("key").alias("ent2"),
-                F.col("domains").alias("d2"),
-                F.col("ranges").alias("r2"),
-            ),
-            "ent2",
-            "left",
+
+    def fill(self, m: str, lo: int, n: int):
+        """Dense values of positions [lo, lo+n) of the pos -> val map
+        column `m`, pad where absent; vectors are flattened so every
+        slot is one fixed-length array."""
+        cells = F.transform(
+            F.sequence(F.lit(lo), F.lit(lo + n - 1)),
+            lambda i: F.coalesce(F.element_at(m, i.cast("int")), self.pad()),
         )
-        .select("ent1", "ent2", "d1", "r1", "d2", "r2")
-    )
-    bc = emb_bc.bc
-    p_dict = params.to_dict()
-    M = max_prop_len
+        return cells if self.bc is not None else F.flatten(cells)
 
-    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        state = bc.value
-        indexer, mat = state["indexer"], state["matrix"]
-        p = KernelParams.from_dict(p_dict)
-        cache: dict = {}
+    def gather(self):
+        """Executor-side step: the two sides' batch columns -> float64
+        [B, 2, *shape, d] in one allocation, each side's slice
+        contiguous — the layout kernel_np's index entry points gather
+        (emb[idx] per side), so the broadcast source scores
+        bit-identically. The returned function holds only the broadcast
+        handle and d, never a DataFrame, so it pickles into the UDF."""
+        d, bc = self.dim, self.bc
 
-        def lists_to_idx(col: pd.Series) -> np.ndarray:
-            out = np.zeros((len(col), M), dtype=np.int64)
-            for b, lst in enumerate(col):
-                if lst is None:
-                    continue
-                for i, tok in enumerate(lst[:M]):
-                    out[b, i] = _resolve(tok, indexer, cache)
-            return out
+        def both(c1, c2):
+            return np.vstack(np.concatenate([c1.to_numpy(), c2.to_numpy()]))
 
-        for pdf in batches:
-            B = len(pdf)
-            if B == 0:
-                continue
-            feats = np.zeros((B, 2, 3, M), dtype=np.int64)
-            for side, (ecol, dcol, rcol) in enumerate(
-                [("ent1", "d1", "r1"), ("ent2", "d2", "r2")]
-            ):
-                feats[:, side, 0, 0] = [
-                    _resolve(k, indexer, cache) for k in pdf[ecol]
-                ]
-                feats[:, side, 1, :] = lists_to_idx(pdf[dcol])
-                feats[:, side, 2, :] = lists_to_idx(pdf[rcol])
-            scores = kernel_np.score_property_pairs(feats, mat, p)
-            yield pd.DataFrame(
-                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": scores}
-            )
+        def vectors(c1, c2, shape=()):
+            return both(c1, c2).reshape(2, -1, *shape, d).swapaxes(0, 1)
 
-    return joined.mapInPandas(score_fn, "ent1 string, ent2 string, score double")
+        def rows(c1, c2, shape=()):
+            idx = both(c1, c2).astype(np.int64, copy=False).reshape(2, -1, *shape)
+            return bc.value["matrix"][idx].swapaxes(0, 1)
+
+        return vectors if bc is None else rows
 
 
 # ---------------------------------------------------------------------------
-# Fast path: JVM-side embedify (J5 as an actual broadcast join) + fixed-shape
-# index tensors. Strings never cross into Python; Arrow ships int64 arrays
-# and the UDF is pure numpy. This is the 100 TB layout — the slow path above
-# is kept as the readable reference and for parity tests.
+# Encoders: JVM-side embedify (J5) of contexts into fixed-shape arrays, so
+# strings never cross into Python.
 # ---------------------------------------------------------------------------
-
-def emb_index_df(spark: SparkSession, emb_bc: EmbBroadcast) -> DataFrame:
-    """(norm, idx) dim table from the broadcast indexer (tiny)."""
-    items = list(emb_bc.bc.value["indexer"].items())
-    return spark.createDataFrame(items, "norm string, idx long")
-
 
 def _flat_feature_positions(P: int, L: int):
     """Ragged features -> array<struct<pos,tok>> with pos the row-major
-    [t][p][l] position (shared by the index and pre-joined encoders)."""
+    [t][p][l] position."""
     return F.flatten(
         F.transform(
             F.col("features"),
@@ -488,20 +414,33 @@ def _flat_feature_positions(P: int, L: int):
     )
 
 
+def _position_map(df: DataFrame, keys: list[str], val_type: str) -> DataFrame:
+    """Group (keys, pos, val) rows into one pos -> val map column `m`
+    (a null pos — an entity with no context — adds no entry)."""
+    entry = F.when(F.col("pos").isNotNull(), F.struct(F.col("pos"), F.col("val")))
+    return df.groupBy(*keys).agg(
+        F.map_from_entries(
+            F.array_agg(entry).cast(f"array<struct<pos:int,val:{val_type}>>")
+        ).alias("m")
+    )
+
+
 def encode_features(
     features: DataFrame,
-    emb_idx: DataFrame,
+    source: VectorSource,
     max_types: int = 4,
     max_paths: int = 2,
     max_pathlen: int = 4,
     label_map: DataFrame | None = None,
 ) -> DataFrame:
-    """(key, node_idx, fidx) with fidx a dense array<long> of length
-    T*P*L laid out [t][p][l] (row-major), pad/UNK = 0.
+    """(key, node, feat): `node` is the entity's own name value and
+    `feat` the dense [t][p][l] grid (row-major) of T*P*L token values,
+    pad where a slot is empty — int64 indices on the broadcast source,
+    T*P*L*d doubles on the pre-joined one.
 
-    All string normalization + index resolution happens JVM-side via
-    norm_label_col + a broadcast hash join; the ragged->dense scatter
-    uses a position map (map_from_entries + sequence fill).
+    Normalization and lookup run JVM-side (norm_label_col + one join
+    against the source table); the ragged->dense scatter uses a
+    position map (map_from_entries + sequence fill).
     """
     T, P, L = max_types, max_paths, max_pathlen
     flat = _flat_feature_positions(P, L)
@@ -522,161 +461,26 @@ def encode_features(
         F.col("pt.pos").alias("pos"),
         norm_label_col(F.col("__tok")).alias("norm"),
     )
-    joined = exploded.join(F.broadcast(emb_idx), "norm", "left").select(
-        "key", "ent_local", "e_src", "pos", F.coalesce("idx", F.lit(0)).alias("idx")
-    )
-    dense = (
-        joined.groupBy("key", "ent_local", "e_src")
-        .agg(
-            F.map_from_entries(
-                F.array_agg(
-                    F.when(
-                        F.col("pos").isNotNull(),
-                        F.struct(F.col("pos"), F.col("idx")),
-                    )
-                ).cast("array<struct<pos:int,idx:long>>")
-            ).alias("m")
-        )
-        .select(
-            "key",
-            "ent_local",
-            "e_src",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(T * P * L - 1)),
-                lambda i: F.coalesce(F.element_at("m", i.cast("int")), F.lit(0)),
-            ).alias("fidx"),
-        )
-    )
+    keys = ["key", "ent_local", "e_src"]
+    dense = _position_map(
+        source.lookup(exploded, *keys, "pos"), keys, source.val_type
+    ).select(*keys, source.fill("m", 0, T * P * L).alias("feat"))
     node = _substitute_labels(
         dense, F.col("e_src"), F.col("ent_local"), label_map
-    ).select(
-        "key", "fidx", norm_label_col(F.col("__tok")).alias("norm")
-    ).join(F.broadcast(emb_idx), "norm", "left")
-    return node.select(
-        "key", F.coalesce("idx", F.lit(0)).alias("node_idx"), "fidx"
-    )
-
-
-def encode_node_idx(
-    concepts_keys: DataFrame,
-    emb_idx: DataFrame,
-    label_map: DataFrame | None = None,
-) -> DataFrame:
-    """(key, node_idx) for candidate entities (direct-route lookups)."""
-    local = F.substring_index(F.col("key"), "#", -1)
-    src = F.substring_index(F.col("key"), "#", 1)
-    return (
-        _substitute_labels(concepts_keys.select("key"), src, local, label_map)
-        .select("key", norm_label_col(F.col("__tok")).alias("norm"))
-        .join(F.broadcast(emb_idx), "norm", "left")
-        .select("key", F.coalesce("idx", F.lit(0)).alias("node_idx"))
-    )
-
-
-def score_concept_candidates_fast(
-    candidates: DataFrame,
-    enc_features: DataFrame,
-    emb_bc: EmbBroadcast,
-    params: KernelParams,
-    max_types: int = 4,
-    label_map: DataFrame | None = None,
-) -> DataFrame:
-    """Fast scorer over pre-encoded features. Rows missing an encoded
-    entry take the direct cosine route (A6) using node indices resolved
-    JVM-side the same way."""
-    spark = candidates.sparkSession
-    emb_idx = emb_index_df(spark, emb_bc)
-    cand_keys = (
-        candidates.select(F.col("ent1").alias("key"))
-        .unionByName(candidates.select(F.col("ent2").alias("key")))
-        .distinct()
-    )
-    nodes = encode_node_idx(cand_keys, emb_idx, label_map)
-    f = enc_features.select("key", "node_idx", "fidx")
-    # one per-key dim table (direct node idx + encoded features) joined
-    # once per side — the 4-join form built the `nodes` subtree (a
-    # distinct + normalize + broadcast join) TWICE and paid 4 broadcast
-    # builds per scorer; nodes covers every candidate endpoint, so the
-    # merged left join carries identical (n, fidx, d) values. The lazy
-    # localCheckpoint shares one computation between both side joins.
-    dim = (
-        nodes.select("key", F.col("node_idx").alias("d"))
-        .join(
-            f.select("key", F.col("node_idx").alias("n"), "fidx"),
-            "key",
-            "left",
-        )
-        .localCheckpoint(eager=False)
-    )
-    j = (
-        candidates.join(
-            dim.select(
-                F.col("key").alias("ent1"),
-                F.col("n").alias("n1"),
-                F.col("fidx").alias("f1"),
-                F.col("d").alias("d1"),
-            ),
-            "ent1",
-            "left",
-        )
-        .join(
-            dim.select(
-                F.col("key").alias("ent2"),
-                F.col("n").alias("n2"),
-                F.col("fidx").alias("f2"),
-                F.col("d").alias("d2"),
-            ),
-            "ent2",
-            "left",
-        )
-        .select("ent1", "ent2", "n1", "n2", "f1", "f2", "d1", "d2")
-    )
-    bc = emb_bc.bc
-    p_dict = params.to_dict()
-    T, P, L = max_types, params.max_paths, params.max_pathlen
-
-    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mat = bc.value["matrix"]
-        p = KernelParams.from_dict(p_dict)
-        for pdf in batches:
-            B = len(pdf)
-            if B == 0:
-                continue
-            miss = pdf["f1"].isna().to_numpy() | pdf["f2"].isna().to_numpy()
-            scores = np.zeros(B, dtype=np.float64)
-            if (~miss).any():
-                sub = pdf[~miss]
-                f1 = np.vstack(sub["f1"].to_numpy()).reshape(-1, T, P, L)
-                f2 = np.vstack(sub["f2"].to_numpy()).reshape(-1, T, P, L)
-                nodes_arr = np.stack(
-                    [sub["n1"].to_numpy().astype(np.int64),
-                     sub["n2"].to_numpy().astype(np.int64)], axis=1
-                )
-                feats = np.stack([f1, f2], axis=1)
-                scores[~miss] = kernel_np.score_concept_pairs(
-                    nodes_arr, feats, mat, p
-                )
-            if miss.any():
-                sub = pdf[miss]
-                v1 = mat[sub["d1"].fillna(0).to_numpy().astype(np.int64)]
-                v2 = mat[sub["d2"].fillna(0).to_numpy().astype(np.int64)]
-                scores[miss] = kernel_np.direct_cosine(v1, v2)
-            yield pd.DataFrame(
-                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": scores}
-            )
-
-    return j.mapInPandas(score_fn, "ent1 string, ent2 string, score double")
+    ).select("key", "feat", norm_label_col(F.col("__tok")).alias("norm"))
+    return source.lookup(node, "key", "feat", out="node").select("key", "node", "feat")
 
 
 def encode_prop_contexts(
     prop_contexts: DataFrame,
-    emb_idx: DataFrame,
+    source: VectorSource,
     max_prop_len: int = 16,
     label_map: DataFrame | None = None,
 ) -> DataFrame:
-    """(key, self_idx, dom_idx, rng_idx) with dense array<long> of
-    length max_prop_len per side. One explode + one groupBy for all
-    three slots (tagged positions), JVM-encoded like encode_features."""
+    """(key, self, dom, rng): the property's own name value plus dense
+    max_prop_len-slot domain and range arrays (see encode_features for
+    the value layout). One explode + one groupBy for all three slots
+    (tagged positions)."""
     M = max_prop_len
     base = prop_contexts.select(
         "src",
@@ -705,494 +509,169 @@ def encode_prop_contexts(
     ).select(
         "key", F.col("pt.pos").alias("pos"), norm_label_col(F.col("__tok")).alias("norm")
     )
-    jx = ex.join(F.broadcast(emb_idx), "norm", "left").select(
-        "key", "pos", F.coalesce("idx", F.lit(0)).alias("idx")
-    )
-    dense = jx.groupBy("key").agg(
-        F.map_from_entries(
-            F.array_agg(F.struct(F.col("pos"), F.col("idx"))).cast(
-                "array<struct<pos:int,idx:long>>"
-            )
-        ).alias("m")
-    )
-    fill = lambda lo: F.transform(  # noqa: E731
-        F.sequence(F.lit(lo), F.lit(lo + M - 1)),
-        lambda i: F.coalesce(F.element_at("m", i.cast("int")), F.lit(0)),
+    dense = _position_map(
+        source.lookup(ex, "key", "pos"), ["key"], source.val_type
     )
     return dense.select(
         "key",
-        F.coalesce(F.element_at("m", -1), F.lit(0)).alias("self_idx"),
-        fill(0).alias("dom_idx"),
-        fill(M).alias("rng_idx"),
+        F.coalesce(F.element_at("m", -1), source.pad()).alias("self"),
+        source.fill("m", 0, M).alias("dom"),
+        source.fill("m", M, M).alias("rng"),
     )
 
 
-def score_prop_candidates_fast(
-    candidates: DataFrame,
-    enc_props: DataFrame,
-    emb_bc: EmbBroadcast,
-    params: KernelParams,
-    max_prop_len: int = 16,
+def encode_nodes(
+    keys: DataFrame,
+    source: VectorSource,
     label_map: DataFrame | None = None,
 ) -> DataFrame:
-    """Property scorer (K9). Pairs with no encoded context row (props
-    that never appear with both domain and range — possible when the
-    property universe comes from parsed OWL, S1) take the direct
-    raw-name-cosine route, mirroring the reference's KeyError fallback
-    (train.py:384-397, A6)."""
-    M = max_prop_len
-    spark = candidates.sparkSession
-    emb_idx = emb_index_df(spark, emb_bc)
-    cand_keys = (
-        candidates.select(F.col("ent1").alias("key"))
-        .unionByName(candidates.select(F.col("ent2").alias("key")))
-        .distinct()
-    )
-    nodes = encode_node_idx(cand_keys, emb_idx, label_map)
-    # merged per-key dim table, one join per side (see the concept
-    # scorer note): nodes covers every candidate endpoint, so values
-    # are identical to the old 4-join form
-    dim = (
-        nodes.select("key", F.col("node_idx").alias("d"))
-        .join(
-            enc_props.select("key", "self_idx", "dom_idx", "rng_idx"),
-            "key",
-            "left",
-        )
-        .localCheckpoint(eager=False)
-    )
-    j = (
-        candidates.join(
-            dim.select(
-                F.col("key").alias("ent1"),
-                F.col("self_idx").alias("s1"),
-                F.col("dom_idx").alias("dm1"),
-                F.col("rng_idx").alias("r1"),
-                F.col("d").alias("d1"),
-            ),
-            "ent1",
-            "left",
-        )
-        .join(
-            dim.select(
-                F.col("key").alias("ent2"),
-                F.col("self_idx").alias("s2"),
-                F.col("dom_idx").alias("dm2"),
-                F.col("rng_idx").alias("r2"),
-                F.col("d").alias("d2"),
-            ),
-            "ent2",
-            "left",
-        )
-        .select("ent1", "ent2", "s1", "dm1", "r1", "s2", "dm2", "r2", "d1", "d2")
-    )
-    bc = emb_bc.bc
-    p_dict = params.to_dict()
-
-    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mat = bc.value["matrix"]
-        p = KernelParams.from_dict(p_dict)
-        for pdf in batches:
-            B = len(pdf)
-            if B == 0:
-                continue
-            miss = pdf["s1"].isna().to_numpy() | pdf["s2"].isna().to_numpy()
-            scores = np.zeros(B, dtype=np.float64)
-            if (~miss).any():
-                sub = pdf[~miss]
-                feats = np.zeros((len(sub), 2, 3, M), dtype=np.int64)
-                for side, (s, dm, r) in enumerate(
-                    [("s1", "dm1", "r1"), ("s2", "dm2", "r2")]
-                ):
-                    feats[:, side, 0, 0] = sub[s].to_numpy().astype(np.int64)
-                    feats[:, side, 1, :] = np.vstack(sub[dm].to_numpy())
-                    feats[:, side, 2, :] = np.vstack(sub[r].to_numpy())
-                scores[~miss] = kernel_np.score_property_pairs(feats, mat, p)
-            if miss.any():
-                sub = pdf[miss]
-                v1 = mat[sub["d1"].fillna(0).to_numpy().astype(np.int64)]
-                v2 = mat[sub["d2"].fillna(0).to_numpy().astype(np.int64)]
-                scores[miss] = kernel_np.direct_cosine(v1, v2)
-            yield pd.DataFrame(
-                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": scores}
-            )
-
-    return j.mapInPandas(score_fn, "ent1 string, ent2 string, score double")
-
-
-def refresh_embeddings(
-    existing: DataFrame | None, new_terms: DataFrame, dim: int
-) -> DataFrame:
-    """S3 embedding-cache merge: embed only terms absent from the
-    existing dim table (the reference's pickle-cache merge loop,
-    train.py:72-87, as an anti-join + union). `new_terms` has a
-    single `term` column (raw); existing follows EMBEDDINGS schema
-    minus idx (key, vec)."""
-    norm_terms = (
-        new_terms.select(norm_label_col(F.col("term")).alias("key"))
-        .filter(F.col("key") != "")
-        .distinct()
-    )
-    embed = embed_udf_factory(dim)
-    if existing is None:
-        fresh = norm_terms
-        base = None
-    else:
-        base = existing.select("key", "vec")
-        fresh = norm_terms.join(base.select("key"), "key", "left_anti")
-    fresh_emb = fresh.withColumn("vec", embed(F.col("key")))
-    merged = fresh_emb if base is None else base.unionByName(fresh_emb)
-    return scalable_rank(merged, "key")
-
-
-# ---------------------------------------------------------------------------
-# Pre-joined-vector path: the distributed-vocabulary layout. When the
-# term universe is too large to broadcast as an (indexer, matrix) pair
-# (billions of distinct terms at 10^12-turn scale would OOM the driver),
-# embedding vectors are JOINED onto the encoded features/candidates from
-# the distributed dim table (build_embeddings_table) instead. No driver
-# collect, no broadcast; the shuffle carries the vectors. Per-row payload
-# is d/1 times heavier than the index path, so the broadcast path stays
-# the default below PipelineConfig.vocab_broadcast_threshold.
-# Output equals the broadcast path to within ~1 ulp (same float64
-# vectors, same per-row math; BLAS tiling under different Arrow batch
-# shapes can flip the last bit) — asserted by tests/test_prejoined.py.
-# ---------------------------------------------------------------------------
-
-
-def _zero_vec(dim: int):
-    return F.array_repeat(F.lit(0.0), dim)
-
-
-def _emb_vecs(emb_table: DataFrame) -> DataFrame:
-    return emb_table.select(F.col("key").alias("norm"), "vec")
-
-
-def encode_node_vec(
-    keys_df: DataFrame,
-    emb_table: DataFrame,
-    dim: int,
-    label_map: DataFrame | None = None,
-) -> DataFrame:
-    """(key, node_vec) for candidate entities — direct-route lookups
-    resolved by JOIN against the distributed dim table (zero vec when
-    the name is out-of-vocabulary, matching matrix row 0)."""
+    """(key, node) for `src#id` keys — the direct-route name lookups."""
     local = F.substring_index(F.col("key"), "#", -1)
     src = F.substring_index(F.col("key"), "#", 1)
-    return (
-        _substitute_labels(keys_df.select("key"), src, local, label_map)
-        .select("key", norm_label_col(F.col("__tok")).alias("norm"))
-        .join(_emb_vecs(emb_table), "norm", "left")
-        .select("key", F.coalesce("vec", _zero_vec(dim)).alias("node_vec"))
+    named = _substitute_labels(keys.select("key"), src, local, label_map).select(
+        "key", norm_label_col(F.col("__tok")).alias("norm")
     )
+    return source.lookup(named, "key", out="node")
 
 
-def encode_features_vec(
-    features: DataFrame,
-    emb_table: DataFrame,
-    max_types: int = 4,
-    max_paths: int = 2,
-    max_pathlen: int = 4,
-    dim: int = 32,
-    label_map: DataFrame | None = None,
-) -> DataFrame:
-    """(key, node_vec, fvec) with fvec a dense array<double> of length
-    T*P*L*dim: the [t][p][l] position grid of encode_features with the
-    embedding VECTOR pre-joined at each position (zero vec = pad/UNK).
-    The scorer reshapes to [B, T, P, L, d] — the same vectors the
-    broadcast path gathers via mat[fidx]."""
-    T, P, L = max_types, max_paths, max_pathlen
-    flat = _flat_feature_positions(P, L)
-    exploded = _substitute_labels(
-        features.select(
-            "src",
-            F.concat_ws("#", "src", "entity").alias("key"),
-            F.col("entity").alias("ent_local"),
-            F.explode_outer(flat).alias("pt"),
-        ),
-        F.col("src"),
-        F.col("pt.tok"),
-        label_map,
-    ).select(
-        "key",
-        "ent_local",
-        F.col("__src").alias("e_src"),
-        F.col("pt.pos").alias("pos"),
-        norm_label_col(F.col("__tok")).alias("norm"),
-    )
-    joined = exploded.join(_emb_vecs(emb_table), "norm", "left").select(
-        "key",
-        "ent_local",
-        "e_src",
-        "pos",
-        F.coalesce("vec", _zero_vec(dim)).alias("vec"),
-    )
-    dense = (
-        joined.groupBy("key", "ent_local", "e_src")
-        .agg(
-            F.map_from_entries(
-                F.array_agg(
-                    F.when(
-                        F.col("pos").isNotNull(),
-                        F.struct(F.col("pos"), F.col("vec")),
-                    )
-                ).cast("array<struct<pos:int,vec:array<double>>>")
-            ).alias("m")
-        )
-        .select(
-            "key",
-            "ent_local",
-            "e_src",
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(T * P * L - 1)),
-                    lambda i: F.coalesce(
-                        F.element_at("m", i.cast("int")), _zero_vec(dim)
-                    ),
-                )
-            ).alias("fvec"),
-        )
-    )
-    node = _substitute_labels(
-        dense, F.col("e_src"), F.col("ent_local"), label_map
-    ).select(
-        "key", "fvec", norm_label_col(F.col("__tok")).alias("norm")
-    ).join(_emb_vecs(emb_table), "norm", "left")
-    return node.select(
-        "key", F.coalesce("vec", _zero_vec(dim)).alias("node_vec"), "fvec"
-    )
+# ---------------------------------------------------------------------------
+# Scorers: one join per candidate side, one Arrow boundary per entity kind,
+# pure numpy over the batch (kernel_np's embedding entry points).
+# ---------------------------------------------------------------------------
+
+_SCORES = "ent1 string, ent2 string, score double"
 
 
-def score_concept_candidates_prejoined(
+def _join_sides(
     candidates: DataFrame,
-    enc_features_vec: DataFrame,
-    emb_table: DataFrame,
-    params: KernelParams,
-    max_types: int = 4,
-    dim: int = 32,
-    label_map: DataFrame | None = None,
+    enc: DataFrame,
+    source: VectorSource,
+    label_map: DataFrame | None,
 ) -> DataFrame:
-    """Concept scorer with NO broadcast state: node/context vectors are
-    pre-joined columns; the UDF is pure numpy over Arrow batches."""
-    cand_keys = (
+    """Candidates joined once per side to one per-key dim table: `d`,
+    the endpoint's name value for the direct route (A6), plus the
+    encoded columns of `enc` (null when the entity has no context).
+    `d` covers every candidate endpoint, so the left join keeps every
+    pair; the lazy localCheckpoint shares one computation between both
+    side joins. Columns come back suffixed 1/2 per side."""
+    endpoints = (
         candidates.select(F.col("ent1").alias("key"))
         .unionByName(candidates.select(F.col("ent2").alias("key")))
         .distinct()
     )
-    nodes = encode_node_vec(cand_keys, emb_table, dim, label_map)
-    f = enc_features_vec.select("key", "node_vec", "fvec")
-    j = (
-        candidates.join(
-            f.select(
-                F.col("key").alias("ent1"),
-                F.col("node_vec").alias("n1"),
-                F.col("fvec").alias("f1"),
-            ),
-            "ent1",
-            "left",
-        )
-        .join(
-            f.select(
-                F.col("key").alias("ent2"),
-                F.col("node_vec").alias("n2"),
-                F.col("fvec").alias("f2"),
-            ),
-            "ent2",
-            "left",
-        )
-        .join(
-            nodes.select(F.col("key").alias("ent1"), F.col("node_vec").alias("d1")),
-            "ent1",
-            "left",
-        )
-        .join(
-            nodes.select(F.col("key").alias("ent2"), F.col("node_vec").alias("d2")),
-            "ent2",
-            "left",
-        )
-        .select("ent1", "ent2", "n1", "n2", "f1", "f2", "d1", "d2")
+    cols = ["d"] + [c for c in enc.columns if c != "key"]
+    dim = (
+        encode_nodes(endpoints, source, label_map)
+        .withColumnRenamed("node", "d")
+        .join(enc, "key", "left")
+        .localCheckpoint(eager=False)
     )
-    p_dict = params.to_dict()
-    T, P, L, D = max_types, params.max_paths, params.max_pathlen, dim
+    j = candidates
+    for s in "12":
+        j = j.join(
+            dim.select(
+                F.col("key").alias(f"ent{s}"),
+                *[F.col(c).alias(f"{c}{s}") for c in cols],
+            ),
+            f"ent{s}",
+            "left",
+        )
+    return j.select("ent1", "ent2", *[f"{c}{s}" for s in "12" for c in cols])
 
-    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = KernelParams.from_dict(p_dict)
-        for pdf in batches:
-            B = len(pdf)
-            if B == 0:
-                continue
-            miss = pdf["f1"].isna().to_numpy() | pdf["f2"].isna().to_numpy()
-            scores = np.zeros(B, dtype=np.float64)
-            if (~miss).any():
-                sub = pdf[~miss]
-                f1 = np.vstack(sub["f1"].to_numpy()).reshape(-1, T, P, L, D)
-                f2 = np.vstack(sub["f2"].to_numpy()).reshape(-1, T, P, L, D)
-                n1 = np.vstack(sub["n1"].to_numpy())
-                n2 = np.vstack(sub["n2"].to_numpy())
-                scores[~miss] = kernel_np.score_concept_pairs_emb(
-                    np.stack([n1, n2], axis=1), np.stack([f1, f2], axis=1), p
-                )
-            if miss.any():
-                sub = pdf[miss]
-                zero = np.zeros(D, dtype=np.float64)
-                v1 = np.vstack([zero if v is None else v for v in sub["d1"]])
-                v2 = np.vstack([zero if v is None else v for v in sub["d2"]])
-                scores[miss] = kernel_np.direct_cosine(v1, v2)
+
+def _score_batches(
+    batches: Iterator[pd.DataFrame], p_dict: dict, score
+) -> Iterator[pd.DataFrame]:
+    """Shared mapInPandas body: `score(pdf, params)` per non-empty batch."""
+    p = KernelParams.from_dict(p_dict)
+    for pdf in batches:
+        if len(pdf):
             yield pd.DataFrame(
-                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": scores}
+                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": score(pdf, p)}
             )
 
-    return j.mapInPandas(score_fn, "ent1 string, ent2 string, score double")
+
+def _direct(pdf: pd.DataFrame, gather) -> np.ndarray:
+    """A6 direct route: raw name-embedding cosine (Quirk Q3 resolved to
+    the reference's intent, sim >= threshold)."""
+    v = gather(pdf["d1"], pdf["d2"])
+    return kernel_np.direct_cosine(v[:, 0], v[:, 1])
 
 
-def encode_prop_contexts_vec(
-    prop_contexts: DataFrame,
-    emb_table: DataFrame,
-    max_prop_len: int = 16,
-    dim: int = 32,
+def score_concepts(
+    candidates: DataFrame,
+    enc_features: DataFrame,
+    source: VectorSource,
+    params: KernelParams,
+    max_types: int = 4,
     label_map: DataFrame | None = None,
 ) -> DataFrame:
-    """(key, self_vec, dom_vec, rng_vec) with dom/rng dense M*dim
-    arrays in slot order — the vector twin of encode_prop_contexts."""
-    M = max_prop_len
-    base = prop_contexts.select(
-        "src",
-        F.concat_ws("#", "src", "prop").alias("key"),
-        F.col("prop").alias("prop_local"),
-        F.slice("domains", 1, M).alias("domains"),
-        F.slice("ranges", 1, M).alias("ranges"),
-    )
-    tagged = F.concat(
-        F.array(F.struct(F.lit(-1).alias("pos"), F.col("prop_local").alias("tok"))),
-        F.transform(
-            F.col("domains"),
-            lambda tok, i: F.struct(i.alias("pos"), tok.alias("tok")),
-        ),
-        F.transform(
-            F.col("ranges"),
-            lambda tok, i: F.struct((i + M).alias("pos"), tok.alias("tok")),
-        ),
-    )
-    ex = _substitute_labels(
-        base.select("src", "key", F.explode(tagged).alias("pt")),
-        F.col("src"),
-        F.col("pt.tok"),
+    """Concept pairs -> (ent1, ent2, score) over encode_features output
+    (K1-K8). Pairs with a side lacking encoded features take the direct
+    route (A6), the reference's KeyError fallback (train.py:384-397)."""
+    j = _join_sides(
+        candidates,
+        enc_features.select("key", F.col("node").alias("n"), F.col("feat").alias("f")),
+        source,
         label_map,
-    ).select(
-        "key", F.col("pt.pos").alias("pos"), norm_label_col(F.col("__tok")).alias("norm")
     )
-    jx = ex.join(_emb_vecs(emb_table), "norm", "left").select(
-        "key", "pos", F.coalesce("vec", _zero_vec(dim)).alias("vec")
-    )
-    dense = jx.groupBy("key").agg(
-        F.map_from_entries(
-            F.array_agg(F.struct(F.col("pos"), F.col("vec"))).cast(
-                "array<struct<pos:int,vec:array<double>>>"
+    gather = source.gather()
+    shape = (max_types, params.max_paths, params.max_pathlen)
+
+    def score(pdf: pd.DataFrame, p: KernelParams) -> np.ndarray:
+        miss = (pdf["f1"].isna() | pdf["f2"].isna()).to_numpy()
+        scores = np.zeros(len(pdf), dtype=np.float64)
+        if (~miss).any():
+            sub = pdf[~miss]
+            scores[~miss] = kernel_np.score_concept_pairs_emb(
+                gather(sub["n1"], sub["n2"]), gather(sub["f1"], sub["f2"], shape), p
             )
-        ).alias("m")
-    )
-    fill = lambda lo: F.flatten(  # noqa: E731
-        F.transform(
-            F.sequence(F.lit(lo), F.lit(lo + M - 1)),
-            lambda i: F.coalesce(F.element_at("m", i.cast("int")), _zero_vec(dim)),
-        )
-    )
-    return dense.select(
-        "key",
-        F.coalesce(F.element_at("m", -1), _zero_vec(dim)).alias("self_vec"),
-        fill(0).alias("dom_vec"),
-        fill(M).alias("rng_vec"),
-    )
+        if miss.any():
+            scores[miss] = _direct(pdf[miss], gather)
+        return scores
+
+    p_dict = params.to_dict()
+    return j.mapInPandas(lambda it: _score_batches(it, p_dict, score), _SCORES)
 
 
-def score_prop_candidates_prejoined(
+def score_props(
     candidates: DataFrame,
-    enc_props_vec: DataFrame,
-    emb_table: DataFrame,
+    enc_props: DataFrame,
+    source: VectorSource,
     params: KernelParams,
     max_prop_len: int = 16,
-    dim: int = 32,
     label_map: DataFrame | None = None,
 ) -> DataFrame:
-    """Property scorer (K9) over pre-joined vectors; missing-context
-    pairs take the direct-cosine route like the index path."""
+    """Property pairs (K9): sum-pooled (self, domains, ranges) cosine
+    mixture (train.py:339-346). Props without an encoded context row
+    (never seen with both a domain and a range — possible when the
+    property universe comes from parsed OWL, S1) take the direct
+    route (A6)."""
+    j = _join_sides(
+        candidates, enc_props.select("key", "self", "dom", "rng"), source, label_map
+    )
+    gather = source.gather()
     M = max_prop_len
-    cand_keys = (
-        candidates.select(F.col("ent1").alias("key"))
-        .unionByName(candidates.select(F.col("ent2").alias("key")))
-        .distinct()
-    )
-    nodes = encode_node_vec(cand_keys, emb_table, dim, label_map)
-    j = (
-        candidates.join(
-            enc_props_vec.select(
-                F.col("key").alias("ent1"),
-                F.col("self_vec").alias("s1"),
-                F.col("dom_vec").alias("dm1"),
-                F.col("rng_vec").alias("r1"),
-            ),
-            "ent1",
-            "left",
-        )
-        .join(
-            enc_props_vec.select(
-                F.col("key").alias("ent2"),
-                F.col("self_vec").alias("s2"),
-                F.col("dom_vec").alias("dm2"),
-                F.col("rng_vec").alias("r2"),
-            ),
-            "ent2",
-            "left",
-        )
-        .join(
-            nodes.select(F.col("key").alias("ent1"), F.col("node_vec").alias("d1")),
-            "ent1",
-            "left",
-        )
-        .join(
-            nodes.select(F.col("key").alias("ent2"), F.col("node_vec").alias("d2")),
-            "ent2",
-            "left",
-        )
-        .select("ent1", "ent2", "s1", "dm1", "r1", "s2", "dm2", "r2", "d1", "d2")
-    )
-    p_dict = params.to_dict()
 
-    def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        p = KernelParams.from_dict(p_dict)
-        D = None
-        for pdf in batches:
-            B = len(pdf)
-            if B == 0:
-                continue
-            miss = pdf["s1"].isna().to_numpy() | pdf["s2"].isna().to_numpy()
-            scores = np.zeros(B, dtype=np.float64)
-            if (~miss).any():
-                sub = pdf[~miss]
-                if D is None:
-                    D = len(sub["s1"].iloc[0])
-                n = len(sub)
-                feats = np.zeros((n, 2, 3, M, D), dtype=np.float64)
-                for side, (s, dm, r) in enumerate(
-                    [("s1", "dm1", "r1"), ("s2", "dm2", "r2")]
-                ):
-                    feats[:, side, 0, 0, :] = np.vstack(sub[s].to_numpy())
-                    feats[:, side, 1] = np.vstack(sub[dm].to_numpy()).reshape(n, M, D)
-                    feats[:, side, 2] = np.vstack(sub[r].to_numpy()).reshape(n, M, D)
-                # sum over M in position order — identical to the index
-                # path's emb[prop_features].sum(axis=-2)
-                scores[~miss] = kernel_np.score_property_pairs_emb(
-                    feats.sum(axis=-2), p
-                )
-            if miss.any():
-                sub = pdf[miss]
-                d0 = len(sub["d1"].iloc[0]) if sub["d1"].iloc[0] is not None else 32
-                zero = np.zeros(d0, dtype=np.float64)
-                v1 = np.vstack([zero if v is None else v for v in sub["d1"]])
-                v2 = np.vstack([zero if v is None else v for v in sub["d2"]])
-                scores[miss] = kernel_np.direct_cosine(v1, v2)
-            yield pd.DataFrame(
-                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": scores}
+    def score(pdf: pd.DataFrame, p: KernelParams) -> np.ndarray:
+        miss = (pdf["self1"].isna() | pdf["self2"].isna()).to_numpy()
+        scores = np.zeros(len(pdf), dtype=np.float64)
+        if (~miss).any():
+            sub = pdf[~miss]
+            # [B, side, (self, domains, ranges), d], slots sum-pooled
+            # in position order like emb[prop_features].sum(axis=-2)
+            agg = np.stack(
+                [
+                    gather(sub["self1"], sub["self2"]),
+                    gather(sub["dom1"], sub["dom2"], (M,)).sum(axis=-2),
+                    gather(sub["rng1"], sub["rng2"], (M,)).sum(axis=-2),
+                ],
+                axis=2,
             )
+            scores[~miss] = kernel_np.score_property_pairs_emb(agg, p)
+        if miss.any():
+            scores[miss] = _direct(pdf[miss], gather)
+        return scores
 
-    return j.mapInPandas(score_fn, "ent1 string, ent2 string, score double")
+    p_dict = params.to_dict()
+    return j.mapInPandas(lambda it: _score_batches(it, p_dict, score), _SCORES)

@@ -72,7 +72,7 @@ def concept_pool_partials(
     (dL_ds = 2*(score - y), no 1/B — the combiner normalizes) plus the
     squared-error sum. The attended context tensor is rebuilt per batch
     from the broadcast frozen embedding matrix (constant w.r.t. every
-    trainable parameter), exactly the fast scorer's layout — fidx int64
+    trainable parameter), exactly the broadcast scorer's layout — int64
     index grids, never per-row Python."""
     bc = emb_bc.bc
     tpd = _tp_to_dict(tp)
@@ -163,9 +163,9 @@ def prop_cosine_pool(lab_p: DataFrame, encp_df: DataFrame, emb_bc) -> DataFrame:
     def side(tag):
         return encp_df.select(
             F.col("key").alias(f"ent{tag}"),
-            F.col("self_idx").alias(f"s{tag}"),
-            F.col("dom_idx").alias(f"d{tag}"),
-            F.col("rng_idx").alias(f"r{tag}"),
+            F.col("self").alias(f"s{tag}"),
+            F.col("dom").alias(f"d{tag}"),
+            F.col("rng").alias(f"r{tag}"),
         )
 
     j = lab_p.join(side(1), "ent1").join(side(2), "ent2").select(

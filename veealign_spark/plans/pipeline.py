@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,19 +48,20 @@ class PipelineConfig:
     extractor: str = "jvm"  # "jvm" | "pandas"
     params_seed: int = 7
     score_partitions: int | None = None
-    # "broadcast": (indexer, matrix) rides a SparkContext broadcast —
-    # fastest per row, bounded by driver/executor memory.
-    # "prejoined": vectors JOIN onto features/candidates from the
-    # distributed dim table — no driver collect, unbounded vocabulary.
-    # "auto": broadcast below vocab_broadcast_threshold distinct terms.
-    # Default MEASURED, not argued (scripts/bench_vector_modes.py,
-    # BENCH/PLANS.md r5: vocabulary inflated via pad labels so scoring
-    # work is constant): broadcast/prejoined wall ratio 0.90 at 250k
-    # terms, 1.97 at 500k, 1.90 at 1M, 3.99 at 3M — the broadcast
-    # layout's driver-side normalize+embed+pickle grows linearly while
-    # the prejoined dim-table build is flat. Crossover ~300k on this
-    # box (32 cores, 16g driver).
-    vector_mode: str = "auto"  # "auto" | "broadcast" | "prejoined"
+    # Vector layout (operators/scoring.py VectorSource), chosen per run
+    # by a bounded vocabulary probe: at or below this many distinct
+    # terms the (indexer, matrix) pair rides a SparkContext broadcast —
+    # fastest per row, bounded by driver/executor memory; above it the
+    # vectors JOIN onto features/candidates from the distributed dim
+    # table — no driver collect, unbounded vocabulary. 0 forces the
+    # pre-joined layout. Default MEASURED, not argued
+    # (scripts/bench_vector_modes.py, BENCH/PLANS.md r5: vocabulary
+    # inflated via pad labels so scoring work is constant):
+    # broadcast/prejoined wall ratio 0.90 at 250k terms, 1.97 at 500k,
+    # 1.90 at 1M, 3.99 at 3M — the broadcast layout's driver-side
+    # normalize+embed+pickle grows linearly while the prejoined
+    # dim-table build is flat. Crossover ~300k on that box (32 cores,
+    # 16g driver).
     vocab_broadcast_threshold: int = 300_000
     # "seeded" (fixture-pinned gaussian projection) | "identity"
     # (residual rep = node + ctx_gain*context — the untrained default
@@ -195,7 +197,7 @@ def score_candidates_stage(
     concepts: DataFrame,
     features: DataFrame,
     prop_ctx: DataFrame,
-    candidates_df: DataFrame,
+    candidates_df: DataFrame | Future[DataFrame],
     prop_cand: DataFrame,
     label_map: DataFrame | None = None,
     terms: DataFrame | None = None,
@@ -205,17 +207,18 @@ def score_candidates_stage(
     pipeline and the incremental-ingest plan (plans/incremental.py).
     Returns (scores, resolved_vector_mode, timings).
 
+    `candidates_df` is the (ent1, ent2) concept candidate table, or a
+    concurrent.futures.Future that resolves to it: run_pipeline hands
+    over a Future so the candidates stage materializes while the
+    vocabulary probe runs; it is resolved only after the probe.
+
     Embedding layout: broadcast (indexer, matrix) vs pre-joined
-    distributed dim table (see PipelineConfig.vector_mode). The size
-    probe and the vocabulary fetch are ONE bounded job:
-    limit(threshold+1).collect() — ≤ threshold+1 rows ever reach the
-    driver, so an over-threshold vocabulary is detected WITHOUT an
-    unbounded collect (the excess row routes to the pre-joined path or
-    raises for explicit "broadcast"), and a broadcastable one is
-    already in hand (no second pass)."""
-    vector_mode = cfg.vector_mode
-    emb_bc = None
-    emb_table = None
+    distributed dim table (see PipelineConfig.vocab_broadcast_threshold).
+    The size probe and the vocabulary fetch are ONE bounded job:
+    limit(threshold+1) — ≤ threshold+1 rows ever reach the driver, so
+    an over-threshold vocabulary is detected WITHOUT an unbounded
+    collect (the excess row routes to the pre-joined path), and a
+    broadcastable one is already in hand (no second pass)."""
     timings: dict[str, float] = {}
     external = (
         spark.read.parquet(cfg.external_vectors)
@@ -228,49 +231,40 @@ def score_candidates_stage(
     # it from standing-vocab union increment-terms so the probe never
     # re-scans the standing corpus)
     tu = terms
-    owns_tu = False
-    if vector_mode in ("auto", "broadcast"):
-        cap = cfg.vocab_broadcast_threshold
-        if tu is None:
-            # persisted so a pre-joined route reuses the distinct pass
-            # the probe already paid (corpus-sized at 10^12 turns)
-            tu = scoring.term_universe(triples, concepts, label_map).persist()
-            owns_tu = True
-        # Arrow transfer for the probe: up to cap+1 terms move as one
-        # Arrow batch instead of py4j Row objects (the bounded-collect
-        # guarantee is unchanged — limit() still caps what can ever
-        # reach the driver; at the 300k-term threshold this is the
-        # difference between ~0.3s and several seconds)
-        head = tu.limit(cap + 1).toPandas()["term"].tolist()
-        if len(head) <= cap:
-            vector_mode = "broadcast"
-            emb_bc = scoring.EmbBroadcast.from_terms(
-                spark, head, cfg.emb_dim,
-                external=external,
-            )
-        elif cfg.vector_mode == "broadcast":
-            raise ValueError(
-                f"vector_mode='broadcast' over more than {cap} distinct "
-                f"terms (> vocab_broadcast_threshold={cap}) "
-                "would collect the whole vocabulary to the driver — use "
-                "vector_mode='auto' or 'prejoined'"
-            )
-        else:
-            vector_mode = "prejoined"
-    if vector_mode == "prejoined":
-        emb_table = scoring.build_embeddings_table(
-            spark, triples, cfg.emb_dim, concepts, label_map, terms=tu,
-            external=external,
+    owns_tu = tu is None
+    if owns_tu:
+        # persisted so a pre-joined route reuses the distinct pass
+        # the probe already paid (corpus-sized at 10^12 turns)
+        tu = scoring.term_universe(triples, concepts, label_map).persist()
+    cap = cfg.vocab_broadcast_threshold
+    # Arrow transfer for the probe: up to cap+1 terms move as one
+    # Arrow batch instead of py4j Row objects (the bounded-collect
+    # guarantee is unchanged — limit() still caps what can ever
+    # reach the driver; at the 300k-term threshold this is the
+    # difference between ~0.3s and several seconds)
+    head = tu.limit(cap + 1).toPandas()["term"].tolist()
+    if len(head) <= cap:
+        vector_mode = "broadcast"
+        source = scoring.VectorSource.broadcast(
+            spark,
+            scoring.EmbBroadcast.from_terms(spark, head, cfg.emb_dim, external=external),
         )
-    elif owns_tu:
-        tu.unpersist()
+        if owns_tu:
+            tu.unpersist()
+    else:
+        vector_mode = "prejoined"
+        source = scoring.VectorSource.prejoined(
+            scoring.build_embeddings_table(
+                spark, triples, cfg.emb_dim, concepts, label_map, terms=tu,
+                external=external,
+            ),
+            cfg.emb_dim,
+        )
     timings["vocab"] = time.time() - t0
 
-    # The caller may hand candidates as a Future (run_pipeline overlaps
-    # the candidates stage materialization with the vocabulary-probe
-    # job above — the two share no inputs beyond already-materialized
-    # stages). Resolve it only now, after the probe has run.
-    if hasattr(candidates_df, "result"):
+    # Resolve a Future candidates table only now, after the probe (the
+    # two jobs share no inputs beyond already-materialized stages).
+    if isinstance(candidates_df, Future):
         candidates_df = candidates_df.result()
 
     # AQE coalesces the (byte-wise tiny) candidate table to very few
@@ -284,74 +278,45 @@ def score_candidates_stage(
     prop_cand = prop_cand.repartition(max(n_score // 4, 2))
 
     # JVM-side embedify: features/prop contexts become fixed-shape
-    # arrays before the Arrow boundary (strings never reach Python —
-    # the 100 TB layout): int64 index tensors on the broadcast path,
-    # pre-joined float64 vectors on the distributed-vocabulary path.
-    # Entity-universe-sized dim tables, referenced twice each in the
-    # scoring joins — LAZY localCheckpoints: the RDD identity shares
-    # one computation between both references, materialized inside the
-    # scores job itself (the r5 eager+threaded form paid two extra
-    # driver jobs for the same work; the scheduler already runs the
-    # two independent subtrees' stages concurrently within one job).
+    # arrays before the Arrow boundary (strings never reach Python):
+    # int64 index tensors on the broadcast source, pre-joined float64
+    # vectors on the pre-joined one. Entity-universe-sized dim tables,
+    # referenced twice each in the scoring joins — LAZY
+    # localCheckpoints: the RDD identity shares one computation between
+    # both references (the r5 eager+threaded form paid two extra driver
+    # jobs for the same work). Under AQE a lazy localCheckpoint still
+    # runs its plan's shuffle and broadcast stages when it is called;
+    # only the final stage waits for the scores job.
     t0 = time.time()
-
-    def _ckpt(df):
-        return df.localCheckpoint(eager=False)
 
     # Plan-construction is driver-side wall time: every DataFrame op
     # eagerly re-runs the Catalyst analyzer, and the encode+scorer
     # trees measure ~2.6 s built sequentially at bench scale (vs 1.6 s
     # for the scores job itself). The concept chain (encode_features ->
-    # concept scorer) and the property chain (encode_prop_contexts ->
-    # prop scorer) share no intermediate DataFrame, so the two chains
+    # score_concepts) and the property chain (encode_prop_contexts ->
+    # score_props) share no intermediate DataFrame, so the two chains
     # are CONSTRUCTED on two driver threads — same overlap idea the
     # guide applies to independent jobs (§2.6), applied to the
-    # analyzer. No job runs here (all checkpoints stay lazy); plans
-    # are identical to the sequential build.
-    if vector_mode == "broadcast":
-        emb_idx = scoring.emb_index_df(spark, emb_bc)
+    # analyzer; the checkpoints' upstream stages (above) run on the
+    # same two threads. Plans are identical to the sequential build.
+    def _chain_c():
+        enc = scoring.encode_features(
+            features, source, cfg.max_types, cfg.max_paths, cfg.max_pathlen,
+            label_map=label_map,
+        ).localCheckpoint(eager=False)
+        return scoring.score_concepts(
+            candidates_df, enc, source, params, cfg.max_types, label_map=label_map
+        ).withColumn("is_prop", F.lit(False))
 
-        def _chain_c():
-            enc = _ckpt(scoring.encode_features(
-                features, emb_idx, cfg.max_types, cfg.max_paths,
-                cfg.max_pathlen, label_map=label_map,
-            ))
-            return scoring.score_concept_candidates_fast(
-                candidates_df, enc, emb_bc, params, cfg.max_types,
-                label_map=label_map,
-            ).withColumn("is_prop", F.lit(False))
+    def _chain_p():
+        enc = scoring.encode_prop_contexts(
+            prop_ctx, source, label_map=label_map
+        ).localCheckpoint(eager=False)
+        return scoring.score_props(
+            prop_cand, enc, source, params, label_map=label_map
+        ).withColumn("is_prop", F.lit(True))
 
-        def _chain_p():
-            enc = _ckpt(scoring.encode_prop_contexts(
-                prop_ctx, emb_idx, label_map=label_map
-            ))
-            return scoring.score_prop_candidates_fast(
-                prop_cand, enc, emb_bc, params, label_map=label_map
-            ).withColumn("is_prop", F.lit(True))
-    else:
-
-        def _chain_c():
-            enc = _ckpt(scoring.encode_features_vec(
-                features, emb_table, cfg.max_types, cfg.max_paths,
-                cfg.max_pathlen, dim=cfg.emb_dim, label_map=label_map,
-            ))
-            return scoring.score_concept_candidates_prejoined(
-                candidates_df, enc, emb_table, params, cfg.max_types,
-                dim=cfg.emb_dim, label_map=label_map,
-            ).withColumn("is_prop", F.lit(False))
-
-        def _chain_p():
-            enc = _ckpt(scoring.encode_prop_contexts_vec(
-                prop_ctx, emb_table, dim=cfg.emb_dim, label_map=label_map
-            ))
-            return scoring.score_prop_candidates_prejoined(
-                prop_cand, enc, emb_table, params,
-                dim=cfg.emb_dim, label_map=label_map,
-            ).withColumn("is_prop", F.lit(True))
-
-    from concurrent.futures import ThreadPoolExecutor as _TPEenc
-
-    with _TPEenc(2) as _ex:
+    with ThreadPoolExecutor(2) as _ex:
         _fc, _fp = _ex.submit(_chain_c), _ex.submit(_chain_p)
         scores_c, scores_p = _fc.result(), _fp.result()
     timings["encode"] = time.time() - t0
@@ -406,9 +371,7 @@ def run_pipeline(
     # contexts -> features chain (independent jobs back-fill the
     # executors each other's stage tails leave idle, guide-style
     # concurrent submission; stage identity/resume semantics unchanged)
-    from concurrent.futures import ThreadPoolExecutor as _TPE2
-
-    with _TPE2(1) as _bg:
+    with ThreadPoolExecutor(1) as _bg:
         _f_prop = _bg.submit(
             ledger.stage,
             "prop_contexts",
@@ -459,9 +422,7 @@ def run_pipeline(
     # inc_vocab from them exactly once.
     vocab_src = None if derived_dims else concepts
     if ledger.root:
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(3) as _ex:
+        with ThreadPoolExecutor(3) as _ex:
             _fc = _ex.submit(ledger.stage, "concepts", lambda c=concepts: c)
             _fp = _ex.submit(ledger.stage, "props", lambda p=props: p)
             _fv = _ex.submit(
@@ -518,9 +479,7 @@ def run_pipeline(
     # candidates materialization runs on a background thread while the
     # probe executes; score_candidates_stage resolves the future right
     # after the probe, before anything consumes the candidate table.
-    from concurrent.futures import ThreadPoolExecutor as _TPEcand
-
-    with _TPEcand(1) as _cex:
+    with ThreadPoolExecutor(1) as _cex:
         _f_cand = _cex.submit(ledger.stage, "candidates", lambda: all_cand)
         scores_all, vector_mode, timings = score_candidates_stage(
             spark, cfg, params, triples, concepts, features, prop_ctx,
@@ -549,9 +508,7 @@ def run_pipeline(
     # the three kg_* materializations are independent KG-sized jobs —
     # submit them concurrently instead of paying three sequential
     # job latencies
-    from concurrent.futures import ThreadPoolExecutor as _TPE3
-
-    with _TPE3(3) as _ex:
+    with ThreadPoolExecutor(3) as _ex:
         _fs = {
             k: _ex.submit(ledger.stage, k, lambda df=v: df)
             for k, v in kg.items()

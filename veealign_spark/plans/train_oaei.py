@@ -94,18 +94,18 @@ def prepare_training(
         for r in scoring.term_universe(triples, concepts, label_map).collect()
     ]
     emb_bc = scoring.EmbBroadcast.from_terms(spark, terms, cfg.emb_dim)
-    emb_idx = scoring.emb_index_df(spark, emb_bc)
+    source = scoring.VectorSource.broadcast(spark, emb_bc)
     # the encoded feature tables stay DataFrames (the distributed
     # full-pool threshold sweep — tune_threshold — and the distributed
     # gradient path read them in place); the lazy checkpoint makes the
     # bounded pool-key collects below materialize blocks the DataFrame
     # reuse then reads instead of recomputing the encode
     enc_df = scoring.encode_features(
-        features, emb_idx, max_types, cfg.max_paths, cfg.max_pathlen,
+        features, source, max_types, cfg.max_paths, cfg.max_pathlen,
         label_map=label_map,
     ).localCheckpoint(eager=False)
     encp_df = scoring.encode_prop_contexts(
-        prop_ctx, emb_idx, label_map=label_map
+        prop_ctx, source, label_map=label_map
     ).localCheckpoint(eager=False)
 
     # labeled concept pairs (J1+J3): the FULL pool stays a DataFrame —
@@ -142,16 +142,16 @@ def prepare_training(
     enc = enc_df.join(F.broadcast(ckeys_df), "key", "semi").collect()
     encp = encp_df.join(F.broadcast(pkeys_df), "key", "semi").collect()
     node_map = {
-        r["key"]: int(r["node_idx"])
-        for r in scoring.encode_node_idx(
-            ckeys_df.unionByName(pkeys_df).distinct(), emb_idx, label_map
+        r["key"]: int(r["node"])
+        for r in scoring.encode_nodes(
+            ckeys_df.unionByName(pkeys_df).distinct(), source, label_map
         ).collect()
     }
 
     mat = emb_bc.bc.value["matrix"]
     T, P, L = max_types, cfg.max_paths, cfg.max_pathlen
     enc_map = {
-        r["key"]: (int(r["node_idx"]), np.asarray(r["fidx"], dtype=np.int64))
+        r["key"]: (int(r["node"]), np.asarray(r["feat"], dtype=np.int64))
         for r in enc
     }
     base = default_params(
@@ -183,9 +183,9 @@ def prepare_training(
 
     encp_map = {
         r["key"]: (
-            np.atleast_1d(np.asarray(r["self_idx"], dtype=np.int64)),
-            np.asarray(r["dom_idx"], dtype=np.int64),
-            np.asarray(r["rng_idx"], dtype=np.int64),
+            np.atleast_1d(np.asarray(r["self"], dtype=np.int64)),
+            np.asarray(r["dom"], dtype=np.int64),
+            np.asarray(r["rng"], dtype=np.int64),
         )
         for r in encp
     }
@@ -210,7 +210,7 @@ def prepare_training(
         "node_map": node_map,
         "lab_c_full": lab_c_full, "lab_p_full": lab_p_full,
         "enc_df": enc_df, "encp_df": encp_df,
-        "emb_bc": emb_bc, "label_map": label_map,
+        "emb_bc": emb_bc, "source": source, "label_map": label_map,
         "max_false": max_false, "seed": seed,
     }
 
@@ -239,8 +239,8 @@ def distributed_pools(prep: dict) -> tuple[DataFrame, DataFrame]:
     def side(tag):
         return enc_df.select(
             F.col("key").alias(f"ent{tag}"),
-            F.col("node_idx").alias(f"n{tag}"),
-            F.col("fidx").alias(f"f{tag}"),
+            F.col("node").alias(f"n{tag}"),
+            F.col("feat").alias(f"f{tag}"),
         )
 
     cpool = (
@@ -298,18 +298,19 @@ def train_kernel_auto(
 def full_pool_scores(prep: dict, params: KernelParams) -> tuple[DataFrame, DataFrame]:
     """Distributed forward-only scores of the FULL labeled candidate
     pool: (scores, pool_gold) DataFrames. Rides the pipeline's exact
-    int64-index kernel path (score_*_candidates_fast; A6 direct-cosine
-    route for feature-less pairs) over the prep's encoded tables —
+    broadcast-source kernel path (scoring.score_concepts/score_props;
+    A6 direct-cosine route for feature-less pairs) over the prep's
+    encoded tables —
     nothing pool-sized ever reaches the driver. pool_gold is the
     positive subset of the pool (the density-true tuning target)."""
-    scores_c = scoring.score_concept_candidates_fast(
+    scores_c = scoring.score_concepts(
         prep["lab_c_full"].select("ent1", "ent2"),
-        prep["enc_df"], prep["emb_bc"], params, prep["max_types"],
+        prep["enc_df"], prep["source"], params, prep["max_types"],
         label_map=prep["label_map"],
     )
-    scores_p = scoring.score_prop_candidates_fast(
+    scores_p = scoring.score_props(
         prep["lab_p_full"].select("ent1", "ent2"),
-        prep["encp_df"], prep["emb_bc"], params,
+        prep["encp_df"], prep["source"], params,
         label_map=prep["label_map"],
     )
     gold = (

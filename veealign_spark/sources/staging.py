@@ -40,10 +40,6 @@ def write_bucketed(
     )
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def bucketed_join_ready(spark: SparkSession, t1: str, t2: str, on: str) -> DataFrame:
     """Join two identically-bucketed tables on the bucket key — the
     co-located join (no Exchange on either side)."""
