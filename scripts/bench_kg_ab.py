@@ -18,13 +18,14 @@ makes whoever runs first stage it; the ontology constants are unchanged
 between the trees — verified by `git diff <ref> HEAD -- bench.py`).
 
 Usage: python scripts/bench_kg_ab.py [--ref 0848c5b] [--iters 5]
-       [--copies 3000] [--cores 32] [--out /tmp/kg_ab.json]
+       [--copies 3000] [--cores <usable cores>] [--out /tmp/kg_ab.json]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -57,7 +58,7 @@ def main() -> None:
     ap.add_argument("--ref", default="0848c5b")  # round-3 final code
     ap.add_argument("--iters", type=int, default=5)
     ap.add_argument("--copies", type=int, default=3000)
-    ap.add_argument("--cores", type=int, default=32)
+    ap.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--warm-copies", type=int, default=150)
     ap.add_argument("--out", default="/tmp/kg_ab.json")
     args = ap.parse_args()

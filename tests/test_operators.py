@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from veealign_spark.operators import ann, dedup, multimodal, sessions, textstats
+from veealign_spark.operators import ann, dedup, sessions, textstats
 
 
 @pytest.fixture(scope="module")
@@ -197,24 +197,6 @@ def test_sessionize_gap(spark):
     assert got[20]["n_sessions"] == 1
 
 
-def test_multimodal_plumbing(spark, docs):
-    media = multimodal.attach_media(docs)
-    feats = multimodal.extract_features(media, dim=8, deterministic_fake=True)
-    rows = feats.collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert len(r["feature"]) == 8
-        assert r["n_bytes"] > 0
-    # deterministic: same payload -> same feature
-    by_id = {r["media_id"]: list(r["feature"]) for r in rows}
-    assert by_id[1] == by_id[2]  # identical text -> identical payload
-    # the real-decode path is explicitly stubbed
-    import pandas as pd
-
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_batch(pd.Series([b"x"]), 8, deterministic_fake=False)
-
-
 def test_tuned_threshold_beats_pinned(spark):
     """A9 wiring: on a fixture seed where the pinned 0.90 threshold
     admits false positives, gold-tuned acceptance reaches F1 >= the
@@ -361,40 +343,6 @@ def test_lsh_multiprobe_recall_vs_cost(spark):
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.9, recall
     assert n_cand <= 0.2 * brute, (n_cand, brute)
-
-
-def test_multimodal_resize_and_frame_sample(spark, docs):
-    """Resize + frame-sample plumbing: schemas, per-kind filtering,
-    in-batch fan-out, deterministic fake payloads, and the
-    NotImplementedError contract for the real-decode path."""
-    from veealign_spark.operators import multimodal
-
-    media = multimodal.attach_media(docs)
-    resized = multimodal.resize_images(media, 64, 64)
-    rows = resized.collect()
-    assert rows and all(r["out_width"] == 64 for r in rows)
-    assert {len(bytes(r["payload"])) for r in rows} == {64}
-    n_images = media.filter("kind = 'image'").count()
-    assert len(rows) == n_images
-
-    frames = multimodal.sample_frames(media, every_ms=100, max_frames=4)
-    f = frames.collect()
-    n_videos = media.filter("kind = 'video'").count()
-    assert len(f) >= n_videos  # fan-out happened
-    per = {}
-    for r in f:
-        per.setdefault(r["media_id"], []).append(r["frame_idx"])
-    assert all(sorted(v) == list(range(len(v))) and len(v) <= 4 for v in per.values())
-
-    # determinism
-    f2 = {(r["media_id"], r["frame_idx"]): bytes(r["payload"]) for r in frames.collect()}
-    f1 = {(r["media_id"], r["frame_idx"]): bytes(r["payload"]) for r in f}
-    assert f1 == f2
-
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="NotImplementedError|real resize"):
-        multimodal.resize_images(media, deterministic_fake=False).collect()
 
 
 def test_ivf_topk_recall_vs_cost(spark):

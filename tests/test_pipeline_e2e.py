@@ -200,51 +200,23 @@ def test_multi_source_pipeline(spark, fixture_pair):
     assert two == {(a, b) for a, b in ((r["ent1"], r["ent2"]) for r in acc) if b.startswith("src2#")}
 
 
-def _stage_scores(spark, res, cfg, cand_arg):
+def _stage_scores(spark, res, cfg, cand_df):
     """score_candidates_stage over a pipeline result's tables, with the
-    concept candidates handed over as `cand_arg`."""
-    from pyspark.sql import functions as F
+    concept candidates handed over as `cand_df`."""
+    from veealign_spark.plans.pipeline import prop_candidates, score_candidates_stage
 
-    from veealign_spark.operators import candidates as cand
-    from veealign_spark.plans.pipeline import score_candidates_stage
-
-    pn = cand.with_norm(res["props"])
-    prop_cand = (
-        pn.select("kind", F.col("src").alias("src1"), F.col("key").alias("ent1"))
-        .join(
-            pn.select("kind", F.col("src").alias("src2"), F.col("key").alias("ent2")),
-            "kind",
-        )
-        .filter(F.col("src1") < F.col("src2"))
-        .select("ent1", "ent2")
-    )
     scores, _, _ = score_candidates_stage(
         spark, cfg, res["params"], res["triples"], res["concepts"],
-        res["features"], res["prop_contexts"], cand_arg, prop_cand,
+        res["features"], res["prop_contexts"], cand_df,
+        prop_candidates(res["props"]), terms=res["vocab"],
     )
     return scores.select("ent1", "ent2", "score", "is_prop")
 
 
-def test_score_stage_future_candidates_equal_dataframe(spark, pipeline_result):
-    """run_pipeline hands the candidates table to the scoring stage as
-    a Future (its materialization overlaps the vocabulary-probe job);
-    the incremental plan passes a plain DataFrame. Both input shapes
-    must produce identical scores."""
-    from concurrent.futures import Future
-
-    (res, cfg) = pipeline_result
-    fut: Future = Future()
-    fut.set_result(res["candidates"])
-    a = _stage_scores(spark, res, cfg, res["candidates"])
-    b = _stage_scores(spark, res, cfg, fut)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
 def test_score_stage_candidates_with_result_column(spark, pipeline_result):
-    """A candidates DataFrame with a column named `result` is still a
-    DataFrame, not a Future (attribute access on a DataFrame yields
-    its columns, so duck-typing on `.result` would call a Column)."""
+    """A candidates DataFrame with a column named `result` scores the
+    same as the plain table (attribute access on a DataFrame yields its
+    columns, so duck-typing on `.result` would call a Column)."""
     from pyspark.sql import functions as F
 
     (res, cfg) = pipeline_result

@@ -43,16 +43,19 @@ from dataclasses import replace as _dc_replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from veealign_spark.operators import candidates as cand
-from veealign_spark.operators import canonicalize, contexts
+from veealign_spark.operators import canonicalize, contexts, scoring
 from veealign_spark.plans.pipeline import (
+    KG_TABLES,
     PipelineConfig,
     StageLedger,
+    acceptance_threshold,
+    concept_candidates,
     concepts_from_triples,
+    prop_candidates,
     props_from_triples,
     score_candidates_stage,
+    triples_from_transcripts,
 )
-from veealign_spark.sources import transcripts as src_transcripts
 
 
 def _src_of(col):
@@ -138,45 +141,18 @@ def incremental_update(
             f"(in-place source growth changes standing contexts); overlap: {sorted(overlap)}"
         )
 
-    # same stage discipline as run_pipeline: every increment stage is
-    # materialized exactly once (lazy localCheckpoint + count, or
-    # parquet + lineage under checkpoint_dir with inc_<fingerprint>_
-    # names so a shared dir resumes both plans exactly). Without this
+    # same stage graph discipline as run_pipeline: every increment
+    # stage is materialized exactly once (lazy localCheckpoint + count,
+    # or parquet + lineage under checkpoint_dir with inc_<fingerprint>_
+    # names so a shared dir resumes both plans exactly), and each
+    # starts as soon as the stages it reads are done. Without staging
     # the lazy extraction→contexts→scoring DAG re-executes for every
     # downstream action — the kernel scoring alone runs ~4x (accepted
     # census, CC edge count, union-find collect, final reads).
     ledger = StageLedger(spark, cfg.checkpoint_dir)
-    if new_triples is None:
-        extract = (
-            src_transcripts.extract_mentions
-            if cfg.extractor == "jvm"
-            else src_transcripts.extract_mentions_pandas
-        )
-        new_triples = ledger.stage(
-            f"{inc}_triples",
-            lambda: src_transcripts.mentions_to_triples(extract(new_transcripts)),
-        )
-    else:
-        new_triples = ledger.stage(f"{inc}_triples", lambda t=new_triples: t)
 
-    # linear stages over the increment only
-    new_ctx = ledger.stage(
-        f"{inc}_contexts",
-        lambda: contexts.build_contexts(
-            new_triples,
-            bag_of_neighbours=cfg.bag_of_neighbours,
-            max_pathlen=cfg.max_pathlen,
-        ),
-    )
-    new_features = ledger.stage(
-        f"{inc}_features",
-        lambda: contexts.assemble_features(
-            new_ctx, cfg.max_types, cfg.max_paths, cfg.max_pathlen
-        ),
-    )
-    new_prop_ctx = ledger.stage(
-        f"{inc}_prop_contexts", lambda: contexts.build_prop_contexts(new_triples)
-    )
+    def union(r, key):  # the standing table union the increment's
+        return standing[key].unionByName(r[key])
 
     concepts_std = standing.get("concepts")
     if concepts_std is None:
@@ -184,139 +160,114 @@ def incremental_update(
     props_std = standing.get("props")
     if props_std is None:
         props_std = props_from_triples(std_triples)
-    concepts_new = concepts_from_triples(new_triples)
-    concepts_all = concepts_std.unionByName(concepts_new)
-    props_all = props_std.unionByName(props_from_triples(new_triples))
 
     # vocabulary: standing vocab (already materialized, vocab-sized)
     # union the increment's terms — the probe never re-scans the
     # standing corpus. Set-equal to term_universe over the union, so
     # scores are unchanged (vectors are looked up by term, not index).
+    # Older standing dicts without a vocab derive it over the union.
     vocab_std = standing.get("vocab")
-    if vocab_std is not None:
-        from veealign_spark.operators import scoring
 
-        terms_inc = ledger.stage(
-            f"{inc}_vocab",
-            lambda: vocab_std.unionByName(
-                scoring.term_universe(new_triples, concepts_new, label_map)
-            ).distinct(),
+    def build_vocab(r):
+        if vocab_std is None:
+            return scoring.term_universe(union(r, "triples"), r["concepts"], label_map)
+        return vocab_std.unionByName(
+            scoring.term_universe(
+                r["triples"], concepts_from_triples(r["triples"]), label_map
+            )
+        ).distinct()
+
+    def build_score_plan(r):
+        return score_candidates_stage(
+            spark, cfg, params, union(r, "triples"), r["concepts"],
+            union(r, "features"), union(r, "prop_contexts"), r["candidates"],
+            prop_candidates(r["props"], touch_sources=new_srcs),
+            label_map=label_map, terms=r["vocab"],
         )
-    else:  # older standing dicts: derive over the union
-        terms_inc = None
-    triples_all = std_triples.unionByName(new_triples)
-    ctx_all = standing["contexts"].unionByName(new_ctx)
-    features_all = standing["features"].unionByName(new_features)
-    prop_ctx_all = standing["prop_contexts"].unionByName(new_prop_ctx)
-
-    # candidates restricted to pairs touching a new source BEFORE the
-    # join (blocked path: touch_sources filters the join sides, so
-    # standing-vs-standing join work is never paid; censuses still see
-    # every source, exactly as a full rerun would). The cross path is
-    # the fixture/oracle baseline — post-filter is fine there.
-    if cfg.blocking == "cross":
-        touches_new = _src_of(F.col("ent1")).isin(new_srcs) | _src_of(
-            F.col("ent2")
-        ).isin(new_srcs)
-        inc_cand_lazy = cand.cross_candidates_multi(concepts_all).filter(
-            touches_new
-        )
-    else:
-        anc_all = (
-            ctx_all.filter(F.col("nbr_type") == 0)
-            .select("src", "entity", F.element_at("path", -1).alias("ancestor"))
-            .dropDuplicates()
-        )
-        inc_cand_lazy = cand.blocked_candidates_multi(
-            concepts_all,
-            anc_all,
-            hot_key_threshold=cfg.hot_key_threshold,
-            n_salt=cfg.n_salt,
-            touch_sources=new_srcs,
-        )
-    inc_cand = ledger.stage(f"{inc}_candidates", lambda: inc_cand_lazy)
-
-    pn = cand.with_norm(props_all)
-    prop_cand = (
-        pn.select("kind", F.col("src").alias("src1"), F.col("key").alias("ent1"))
-        .join(
-            pn.select(
-                "kind", F.col("src").alias("src2"), F.col("key").alias("ent2")
-            ),
-            "kind",
-        )
-        .filter(F.col("src1") < F.col("src2"))
-        .filter(F.col("src1").isin(new_srcs) | F.col("src2").isin(new_srcs))
-        .select("ent1", "ent2")
-    )
-
-    scores_lazy, vector_mode, timings = score_candidates_stage(
-        spark, cfg, params, triples_all, concepts_all, features_all,
-        prop_ctx_all, inc_cand, prop_cand, label_map=label_map,
-        terms=terms_inc,
-    )
-    scores = ledger.stage(f"{inc}_scores", lambda: scores_lazy)
-
-    threshold = params.threshold
-    if gold is not None:
-        from veealign_spark.operators import metrics as metrics_ops
-
-        threshold, _f1 = metrics_ops.best_threshold(scores, gold)
-    alignments = ledger.stage(
-        f"{inc}_alignments",
-        lambda: scores.withColumn(
-            "accepted", F.col("score") >= F.lit(threshold)
-        ),
-    )
-    accepted_new = alignments.filter(F.col("accepted"))
-    accepted_all = standing["accepted"].unionByName(accepted_new)
 
     # cluster merge: standing assignments are already the CC of the
     # standing accepted edges; re-closing them with the new edges is
     # equivalent to CC over the full accepted set
-    edges = (
-        standing["clusters"]
-        .select(F.col("entity").alias("ent1"), F.col("canon_id").alias("ent2"))
-        .unionByName(accepted_new.select("ent1", "ent2"))
-    )
-    clusters = ledger.stage(
-        f"{inc}_clusters", lambda: canonicalize.connected_components(edges)
-    )
+    def build_clusters(r):
+        edges = (
+            standing["clusters"]
+            .select(F.col("entity").alias("ent1"), F.col("canon_id").alias("ent2"))
+            .unionByName(
+                r["alignments"].filter(F.col("accepted")).select("ent1", "ent2")
+            )
+        )
+        return canonicalize.connected_components(edges)
+
     # KG materialization: remap the STANDING canonical tables through
     # the (old_canon -> new_canon) merge map + union the increment's
     # rows — O(|KG| + increment), never re-deduplicating the corpus
     # (materialize_kg_delta docstring has the merge-only argument).
-    standing_kg = standing.get("kg_triples")
-    if standing_kg is not None:
-        kg = canonicalize.materialize_kg_delta(
-            standing_kg, standing["clusters"], clusters, new_triples
+    def build_kg(r):
+        standing_kg = standing.get("kg_triples")
+        if standing_kg is None:  # older standing dicts without KG tables
+            return canonicalize.materialize_kg(union(r, "triples"), r["clusters"])
+        return canonicalize.materialize_kg_delta(
+            standing_kg, standing["clusters"], r["clusters"], r["triples"]
         )
-    else:  # older standing dicts without materialized KG tables
-        kg = canonicalize.materialize_kg(triples_all, clusters)
-    kg = {k: ledger.stage(f"{inc}_{k}", lambda df=v: df) for k, v in kg.items()}
-    ledger.flush()
 
+    # linear stages (contexts, features, prop_contexts) run over the
+    # increment only
+    res = ledger.run({
+        "triples": ((), lambda r: (
+            new_triples if new_triples is not None
+            else triples_from_transcripts(cfg, new_transcripts)
+        )),
+        "contexts": (("triples",), lambda r: contexts.build_contexts(
+            r["triples"], bag_of_neighbours=cfg.bag_of_neighbours,
+            max_pathlen=cfg.max_pathlen,
+        )),
+        "features": (("contexts",), lambda r: contexts.assemble_features(
+            r["contexts"], cfg.max_types, cfg.max_paths, cfg.max_pathlen
+        )),
+        "prop_contexts": (("triples",), lambda r: contexts.build_prop_contexts(r["triples"])),
+        "concepts": (("triples",), lambda r: concepts_std.unionByName(
+            concepts_from_triples(r["triples"])
+        ), False),
+        "props": (("triples",), lambda r: props_std.unionByName(
+            props_from_triples(r["triples"])
+        ), False),
+        "vocab": (("triples", "concepts"), build_vocab),
+        # candidates restricted to pairs touching a new source
+        "candidates": (("contexts", "concepts"), lambda r: concept_candidates(
+            cfg, r["concepts"], union(r, "contexts"), touch_sources=new_srcs
+        )),
+        "score_plan": (
+            ("triples", "concepts", "props", "features", "prop_contexts",
+             "vocab", "candidates"),
+            build_score_plan, False,
+        ),
+        "scores": (("score_plan",), lambda r: r["score_plan"][0]),
+        "threshold": (("scores",), lambda r: acceptance_threshold(
+            params, r["scores"], gold
+        ), False),
+        "alignments": (("scores", "threshold"), lambda r: r["scores"].withColumn(
+            "accepted", F.col("score") >= F.lit(r["threshold"])
+        )),
+        "clusters": (("alignments",), build_clusters),
+        "kg": (("triples", "clusters"), build_kg, False),
+        **{k: (("kg",), lambda r, k=k: r["kg"][k]) for k in KG_TABLES},
+    }, prefix=f"{inc}_")
+    _, vector_mode, timings = res["score_plan"]
     return {
-        "triples": triples_all,
-        "new_triples": new_triples,
-        "contexts": ctx_all,
-        "features": features_all,
-        "prop_contexts": prop_ctx_all,
-        "concepts": concepts_all,
-        "props": props_all,
-        "vocab": terms_inc,
-        "candidates": inc_cand,
-        "scores": scores,
-        "alignments": alignments,
-        "accepted": accepted_all,
-        "clusters": clusters,
-        "threshold": threshold,
+        **{k: union(res, k) for k in ("triples", "contexts", "features", "prop_contexts")},
+        **{k: res[k] for k in (
+            "concepts", "props", "vocab", "candidates", "scores", "alignments",
+            "clusters", "threshold", *KG_TABLES,
+        )},
+        "new_triples": res["triples"],
+        "accepted": standing["accepted"].unionByName(
+            res["alignments"].filter(F.col("accepted"))
+        ),
         "vector_mode": vector_mode,
         "unstaged_timings": timings,
         "metrics": ledger.metrics,
         "new_sources": new_srcs,
         "max_types": cfg.max_types,
-        **kg,
     }
 
 

@@ -5,6 +5,16 @@ contexts (A1-A5, G1-G2) -> candidates (J1'/J2, cross or blocked+salted)
 -> dual-attention scoring (K1-K9 pandas UDF) -> threshold (P6) ->
 connected components (G3) -> canonical kg_* tables + lineage/metrics.
 
+The stages are declared as one dependency graph, `{name: (deps,
+build)}`, and `StageLedger.run` schedules it: each stage starts as
+soon as the stages it reads have finished, so independent jobs
+(contexts beside prop_contexts and the corpus-wide vocabulary
+distinct; the three kg_* tables) back-fill the executors each other's
+stage tails leave idle. On the first failure nothing new starts, the
+stages already running finish, metrics.json is written and the
+original exception reaches the caller, so no Spark job is left running
+and a re-run resumes exactly the stages that finished.
+
 Resumability (north_rule): every stage boundary can snapshot to
 parquet under checkpoint_dir/stage=<name> (Iceberg snapshots on a real
 cluster — parquet is the sandbox stand-in, same semantics: a completed
@@ -19,7 +29,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,6 +37,7 @@ from pyspark.sql import functions as F
 
 from veealign_spark.operators import candidates as cand
 from veealign_spark.operators import canonicalize, contexts, scoring
+from veealign_spark.operators import metrics as metrics_ops
 from veealign_spark.operators.kernel_np import KernelParams, default_params
 from veealign_spark.sources import transcripts as src_transcripts
 
@@ -99,7 +110,14 @@ class PipelineConfig:
 
 
 class StageLedger:
-    """Stage snapshot/resume + per-partition lineage + metrics.
+    """Stage snapshot/resume + per-partition lineage + metrics, and the
+    scheduler of a plan's stage graph (`run`).
+
+    Failure policy (`run`): the first exception stops all submission;
+    stages already running finish and are recorded, metrics.json is
+    written, and the exception is re-raised unchanged. A stage either
+    completed (its snapshot and metrics row exist) or left nothing a
+    re-run would load, so resume after a failed run is exact.
 
     Without a checkpoint_dir, stages materialize as local checkpoints
     (memory+disk blocks in the executors). Local-checkpoint blocks are
@@ -156,6 +174,51 @@ class StageLedger:
             return df
         return self.snapshot(name, build())
 
+    def run(self, graph: dict, prefix: str = "") -> dict:
+        """Run a stage graph `{name: (deps, build[, staged])}` and return
+        every node's value by name. `build(r)` reads the values of its
+        `deps` from `r`. A node is staged through `stage(prefix + name,
+        ...)` unless it is declared with `staged=False` (driver-side
+        plans and scalars), whose value is `build(r)` itself.
+
+        One pool, as wide as the graph, starts each node as soon as its
+        deps are done; nodes are submitted from the calling thread only.
+        On the first failure nothing more is submitted and the nodes
+        already running are waited for, so no Spark job outlives the
+        call; metrics.json is then written and that exception re-raised.
+        """
+        done: dict = {}
+        todo = dict(graph)
+        running: dict = {}
+        error: BaseException | None = None
+
+        def task(name, build, staged=True):
+            if not staged:
+                return build(done)
+            return self.stage(prefix + name, lambda: build(done))
+
+        with ThreadPoolExecutor(len(graph)) as pool:
+            while running or (todo and error is None):
+                for name, (deps, *spec) in list(todo.items() if error is None else ()):
+                    if all(d in done for d in deps):
+                        del todo[name]
+                        running[pool.submit(task, name, *spec)] = name
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in finished:
+                    name = running.pop(f)
+                    if f.exception() is None:
+                        done[name] = f.result()
+                    elif error is None:
+                        error = f.exception()
+        self.flush()
+        if error is not None:
+            raise error
+        if todo:
+            raise ValueError(f"stage graph: unmet deps for {sorted(todo)}")
+        return done
+
     def flush(self) -> None:
         if self.root:
             with open(os.path.join(self.root, "metrics.json"), "w") as f:
@@ -189,6 +252,77 @@ def props_from_triples(triples: DataFrame) -> DataFrame:
     )
 
 
+KG_TABLES = ("kg_triples", "kg_entities", "kg_edges")
+
+
+def triples_from_transcripts(cfg: PipelineConfig, transcripts: DataFrame) -> DataFrame:
+    extract = (
+        src_transcripts.extract_mentions
+        if cfg.extractor == "jvm"
+        else src_transcripts.extract_mentions_pandas
+    )
+    return src_transcripts.mentions_to_triples(extract(transcripts))
+
+
+def concept_candidates(
+    cfg: PipelineConfig,
+    concepts: DataFrame,
+    ctx: DataFrame,
+    touch_sources: list[str] | None = None,
+) -> DataFrame:
+    """Concept candidates: ALL source pairs in one plan node — pairs
+    are data (self-join on src1 < src2), not per-pair Python unions, so
+    the plan stays O(1) in the number of sources (many-source KG-fusion
+    scale requirement). With `touch_sources`, only pairs with a side in
+    one of them: the blocked join filters its sides BEFORE the join
+    (censuses still see every source); the cross path, the
+    fixture/oracle baseline, post-filters."""
+    if cfg.blocking == "cross":
+        pairs = cand.cross_candidates_multi(concepts)
+        if touch_sources is None:
+            return pairs
+        src1, src2 = (F.split(c, "#").getItem(0) for c in ("ent1", "ent2"))
+        return pairs.filter(src1.isin(touch_sources) | src2.isin(touch_sources))
+    # top root ancestor as a context blocking key — reuse the root
+    # paths already materialized in the contexts stage (nbr_type 0)
+    anc = (
+        ctx.filter(F.col("nbr_type") == 0)
+        .select("src", "entity", F.element_at("path", -1).alias("ancestor"))
+        .dropDuplicates()
+    )
+    return cand.blocked_candidates_multi(
+        concepts, anc, hot_key_threshold=cfg.hot_key_threshold, n_salt=cfg.n_salt,
+        touch_sources=touch_sources,
+    )
+
+
+def prop_candidates(props: DataFrame, touch_sources: list[str] | None = None) -> DataFrame:
+    """Property candidates: the same pairs-as-data self-join as the
+    concept candidates, kind-matched (Object with Object, Datatype with
+    Datatype — data_preprocessing keeps the two universes separate);
+    with `touch_sources`, only pairs with a side in one of them."""
+    pn = cand.with_norm(props)
+    pairs = (
+        pn.select("kind", F.col("src").alias("src1"), F.col("key").alias("ent1"))
+        .join(
+            pn.select("kind", F.col("src").alias("src2"), F.col("key").alias("ent2")),
+            "kind",
+        )
+        .filter(F.col("src1") < F.col("src2"))
+    )
+    if touch_sources is not None:
+        pairs = pairs.filter(
+            F.col("src1").isin(touch_sources) | F.col("src2").isin(touch_sources)
+        )
+    return pairs.select("ent1", "ent2")
+
+
+def acceptance_threshold(params, scores: DataFrame, gold: DataFrame | None) -> float:
+    """The config-pinned threshold, or with `gold` the one tuned on it
+    by the single-pass P/R-curve sweep (A9, argmax F1)."""
+    return params.threshold if gold is None else metrics_ops.best_threshold(scores, gold)[0]
+
+
 def score_candidates_stage(
     spark: SparkSession,
     cfg: PipelineConfig,
@@ -197,7 +331,7 @@ def score_candidates_stage(
     concepts: DataFrame,
     features: DataFrame,
     prop_ctx: DataFrame,
-    candidates_df: DataFrame | Future[DataFrame],
+    candidates_df: DataFrame,
     prop_cand: DataFrame,
     label_map: DataFrame | None = None,
     terms: DataFrame | None = None,
@@ -207,10 +341,10 @@ def score_candidates_stage(
     pipeline and the incremental-ingest plan (plans/incremental.py).
     Returns (scores, resolved_vector_mode, timings).
 
-    `candidates_df` is the (ent1, ent2) concept candidate table, or a
-    concurrent.futures.Future that resolves to it: run_pipeline hands
-    over a Future so the candidates stage materializes while the
-    vocabulary probe runs; it is resolved only after the probe.
+    `terms` is the vocabulary (scoring.term_universe): both plans stage
+    it, so the corpus-wide distinct runs beside the contexts stage and
+    the probe here reads a materialized table; without it the
+    vocabulary is derived from `triples` and `concepts`.
 
     Embedding layout: broadcast (indexer, matrix) vs pre-joined
     distributed dim table (see PipelineConfig.vocab_broadcast_threshold).
@@ -218,7 +352,12 @@ def score_candidates_stage(
     limit(threshold+1) — ≤ threshold+1 rows ever reach the driver, so
     an over-threshold vocabulary is detected WITHOUT an unbounded
     collect (the excess row routes to the pre-joined path), and a
-    broadcastable one is already in hand (no second pass)."""
+    broadcastable one is already in hand (no second pass).
+
+    timings["vocab"] is the probe and the vector source's build;
+    timings["encode"] is the driver-side construction of the encode and
+    scorer plans, and it also holds the shuffle stages the encoders'
+    lazy localCheckpoints run when called under AQE."""
     timings: dict[str, float] = {}
     external = (
         spark.read.parquet(cfg.external_vectors)
@@ -226,16 +365,7 @@ def score_candidates_stage(
         else None
     )
     t0 = time.time()
-    # `terms` lets the caller supply a pre-materialized vocabulary
-    # (the pipeline stages it for resume; the incremental plan derives
-    # it from standing-vocab union increment-terms so the probe never
-    # re-scans the standing corpus)
-    tu = terms
-    owns_tu = tu is None
-    if owns_tu:
-        # persisted so a pre-joined route reuses the distinct pass
-        # the probe already paid (corpus-sized at 10^12 turns)
-        tu = scoring.term_universe(triples, concepts, label_map).persist()
+    tu = terms if terms is not None else scoring.term_universe(triples, concepts, label_map)
     cap = cfg.vocab_broadcast_threshold
     # Arrow transfer for the probe: up to cap+1 terms move as one
     # Arrow batch instead of py4j Row objects (the bounded-collect
@@ -249,8 +379,6 @@ def score_candidates_stage(
             spark,
             scoring.EmbBroadcast.from_terms(spark, head, cfg.emb_dim, external=external),
         )
-        if owns_tu:
-            tu.unpersist()
     else:
         vector_mode = "prejoined"
         source = scoring.VectorSource.prejoined(
@@ -261,11 +389,6 @@ def score_candidates_stage(
             cfg.emb_dim,
         )
     timings["vocab"] = time.time() - t0
-
-    # Resolve a Future candidates table only now, after the probe (the
-    # two jobs share no inputs beyond already-materialized stages).
-    if isinstance(candidates_df, Future):
-        candidates_df = candidates_df.result()
 
     # AQE coalesces the (byte-wise tiny) candidate table to very few
     # partitions, which would serialize the CPU-heavy scoring UDF —
@@ -350,190 +473,94 @@ def run_pipeline(
     """
     cfg = config or PipelineConfig()
     ledger = StageLedger(spark, cfg.checkpoint_dir)
-    params = cfg.kernel_params()
+    if triples is None and transcripts is None:
+        raise ValueError("run_pipeline needs transcripts or triples")
 
-    if triples is None:
-        if transcripts is None:
-            raise ValueError("run_pipeline needs transcripts or triples")
-        extract = (
-            src_transcripts.extract_mentions
-            if cfg.extractor == "jvm"
-            else src_transcripts.extract_mentions_pandas
-        )
-        mentions = extract(transcripts)
-        triples = ledger.stage(
-            "triples", lambda: src_transcripts.mentions_to_triples(mentions)
-        )
-    else:
-        triples = ledger.stage("triples", lambda t=triples: t)
-
-    # prop_contexts depends only on triples — overlap it with the
-    # contexts -> features chain (independent jobs back-fill the
-    # executors each other's stage tails leave idle, guide-style
-    # concurrent submission; stage identity/resume semantics unchanged)
-    with ThreadPoolExecutor(1) as _bg:
-        _f_prop = _bg.submit(
-            ledger.stage,
-            "prop_contexts",
-            lambda: contexts.build_prop_contexts(triples),
-        )
-        ctx = ledger.stage(
-            "contexts",
-            lambda: contexts.build_contexts(
-                triples,
-                bag_of_neighbours=cfg.bag_of_neighbours,
-                max_pathlen=cfg.max_pathlen,
-            ),
-        )
+    def build_params(r):
         if cfg.derive_types:
             # A5 (data_preprocessing.py:318): global max # of non-empty
             # neighbour types; the kernel's type-mixing weights resize to
             # match (K7 branch, train.py:256-264)
-            cfg.max_types = max(contexts.derive_max_types(ctx), 1)
-            params = cfg.kernel_params()
-        features = ledger.stage(
-            "features",
-            lambda: contexts.assemble_features(
-                ctx, cfg.max_types, cfg.max_paths, cfg.max_pathlen
-            ),
-        )
-        prop_ctx = _f_prop.result()
+            cfg.max_types = max(contexts.derive_max_types(r["contexts"]), 1)
+        return cfg.kernel_params()
 
-    derived_dims = concepts is None
-    if concepts is None:
-        concepts = concepts_from_triples(triples)
-    if props is None:
-        props = props_from_triples(triples)
-    # Entity-universe-sized dim tables consumed by the vocabulary
-    # probe AND the candidate join. On the derived path the vocabulary
-    # skips the concepts subtree entirely: derived concept ids are
-    # subclass/property endpoints, i.e. a subset of the triples'
-    # subj/obj terms already in the universe.
-    #
-    # They are STAGED (so the corpus-wide distinct never reruns, and
-    # the incremental plan can reuse them from the standing dict) only
-    # when a checkpoint_dir marks this run as a standing-KG build —
-    # for a one-shot job the extra stage materializations are pure
-    # overhead (measured: they cost the N->4N spark-submit scaling run
-    # ~20s at the 4N point, where fixed job latency bounds speedup).
-    # The three stages are independent corpus scans, submitted
-    # concurrently. Without a checkpoint_dir the same DataFrames ride
-    # the result dict lazily; an incremental consumer stages its
-    # inc_vocab from them exactly once.
-    vocab_src = None if derived_dims else concepts
-    if ledger.root:
-        with ThreadPoolExecutor(3) as _ex:
-            _fc = _ex.submit(ledger.stage, "concepts", lambda c=concepts: c)
-            _fp = _ex.submit(ledger.stage, "props", lambda p=props: p)
-            _fv = _ex.submit(
-                ledger.stage,
-                "vocab",
-                lambda: scoring.term_universe(triples, vocab_src, label_map),
-            )
-            concepts, props, vocab = _fc.result(), _fp.result(), _fv.result()
-        score_terms = vocab
-    else:
-        vocab = scoring.term_universe(triples, vocab_src, label_map)
-        score_terms = None  # probe derives + persists internally
+    # The entity-universe-sized concept/property dim tables are STAGED
+    # (so the incremental plan can reuse them from the standing dict)
+    # only when a checkpoint_dir marks this run as a standing-KG build;
+    # for a one-shot job they stay lazy — the extra materializations
+    # cost the N->4N spark-submit scaling run ~20 s at the 4N point,
+    # where fixed job latency bounds speedup.
+    stage_dims = ledger.root is not None
 
-    # candidate generation: ALL source pairs in one plan node — pairs
-    # are data (self-join on src1 < src2), not per-pair Python unions,
-    # so the plan stays O(1) in the number of sources (many-source
-    # KG-fusion scale requirement)
-    if cfg.blocking == "cross":
-        all_cand = cand.cross_candidates_multi(concepts)
-    else:
-        # top root ancestor as a context blocking key — reuse the root
-        # paths already materialized in the contexts stage (nbr_type 0)
-        anc = (
-            ctx.filter(F.col("nbr_type") == 0)
-            .select("src", "entity", F.element_at("path", -1).alias("ancestor"))
-            .dropDuplicates()
-        )
-        all_cand = cand.blocked_candidates_multi(
-            concepts,
-            anc,
-            hot_key_threshold=cfg.hot_key_threshold,
-            n_salt=cfg.n_salt,
+    def build_score_plan(r):
+        return score_candidates_stage(
+            spark, cfg, r["params"], r["triples"], r["concepts"], r["features"],
+            r["prop_contexts"], r["candidates"], prop_candidates(r["props"]),
+            label_map=label_map, terms=r["vocab"],
         )
 
-    # property candidates: same pairs-as-data self-join, kind-matched
-    # (Object with Object, Datatype with Datatype — data_preprocessing
-    # keeps the two universes separate)
-    pn = cand.with_norm(props)
-    prop_cand = (
-        pn.select("kind", F.col("src").alias("src1"), F.col("key").alias("ent1"))
-        .join(
-            pn.select(
-                "kind", F.col("src").alias("src2"), F.col("key").alias("ent2")
-            ),
-            "kind",
-        )
-        .filter(F.col("src1") < F.col("src2"))
-        .select("ent1", "ent2")
-    )
-
-    # The candidates stage job and the scoring stage's vocabulary-probe
-    # job are independent (candidates needs contexts+concepts, the
-    # probe needs triples+concepts — all already materialized), so the
-    # candidates materialization runs on a background thread while the
-    # probe executes; score_candidates_stage resolves the future right
-    # after the probe, before anything consumes the candidate table.
-    with ThreadPoolExecutor(1) as _cex:
-        _f_cand = _cex.submit(ledger.stage, "candidates", lambda: all_cand)
-        scores_all, vector_mode, timings = score_candidates_stage(
-            spark, cfg, params, triples, concepts, features, prop_ctx,
-            _f_cand, prop_cand, label_map=label_map, terms=score_terms,
-        )
-        candidates_df = _f_cand.result()
-    scores = ledger.stage("scores", lambda: scores_all)
-
-    threshold = params.threshold
-    if gold is not None:
-        from veealign_spark.operators import metrics as metrics_ops
-
-        threshold, _f1 = metrics_ops.best_threshold(scores, gold)
-    alignments = ledger.stage(
-        "alignments",
-        lambda: scores.withColumn(
-            "accepted", F.col("score") >= F.lit(threshold)
+    res = ledger.run({
+        "triples": ((), lambda r: (
+            triples if triples is not None else triples_from_transcripts(cfg, transcripts)
+        )),
+        "contexts": (("triples",), lambda r: contexts.build_contexts(
+            r["triples"], bag_of_neighbours=cfg.bag_of_neighbours,
+            max_pathlen=cfg.max_pathlen,
+        )),
+        "prop_contexts": (("triples",), lambda r: contexts.build_prop_contexts(r["triples"])),
+        # The vocabulary is staged on every run: its corpus-wide
+        # distinct reads only the triples (and the given concepts), so
+        # it runs beside contexts and the bounded probe in
+        # score_candidates_stage reads the staged table. On the derived
+        # path it skips the concepts subtree entirely: derived concept
+        # ids are subclass/property endpoints, i.e. a subset of the
+        # triples' subj/obj terms already in the universe.
+        "vocab": (("triples",), lambda r: scoring.term_universe(
+            r["triples"], concepts, label_map
+        )),
+        "params": (("contexts",), build_params, False),
+        "features": (("contexts", "params"), lambda r: contexts.assemble_features(
+            r["contexts"], cfg.max_types, cfg.max_paths, cfg.max_pathlen
+        )),
+        "concepts": (("triples",), lambda r: (
+            concepts if concepts is not None else concepts_from_triples(r["triples"])
+        ), stage_dims),
+        "props": (("triples",), lambda r: (
+            props if props is not None else props_from_triples(r["triples"])
+        ), stage_dims),
+        "candidates": (("contexts", "concepts"), lambda r: concept_candidates(
+            cfg, r["concepts"], r["contexts"]
+        )),
+        "score_plan": (
+            ("params", "triples", "concepts", "features", "prop_contexts",
+             "props", "vocab", "candidates"),
+            build_score_plan, False,
         ),
-    )
-    accepted = alignments.filter(F.col("accepted"))
-
-    clusters = ledger.stage(
-        "clusters", lambda: canonicalize.connected_components(accepted)
-    )
-    kg = canonicalize.materialize_kg(triples, clusters)
-    # the three kg_* materializations are independent KG-sized jobs —
-    # submit them concurrently instead of paying three sequential
-    # job latencies
-    with ThreadPoolExecutor(3) as _ex:
-        _fs = {
-            k: _ex.submit(ledger.stage, k, lambda df=v: df)
-            for k, v in kg.items()
-        }
-        kg = {k: f.result() for k, f in _fs.items()}
-
-    ledger.flush()
+        "scores": (("score_plan",), lambda r: r["score_plan"][0]),
+        "threshold": (("params", "scores"), lambda r: acceptance_threshold(
+            r["params"], r["scores"], gold
+        ), False),
+        "alignments": (("scores", "threshold"), lambda r: r["scores"].withColumn(
+            "accepted", F.col("score") >= F.lit(r["threshold"])
+        )),
+        "clusters": (("alignments",), lambda r: canonicalize.connected_components(
+            r["alignments"].filter(F.col("accepted"))
+        )),
+        "kg": (("triples", "clusters"), lambda r: canonicalize.materialize_kg(
+            r["triples"], r["clusters"]
+        ), False),
+        **{k: (("kg",), lambda r, k=k: r["kg"][k]) for k in KG_TABLES},
+    })
+    _, vector_mode, timings = res["score_plan"]
     return {
-        "triples": triples,
-        "contexts": ctx,
-        "features": features,
-        "prop_contexts": prop_ctx,
-        "concepts": concepts,
-        "props": props,
-        "vocab": vocab,
-        "candidates": candidates_df,
-        "scores": scores,
-        "alignments": alignments,
-        "accepted": accepted,
-        "clusters": clusters,
+        **{k: res[k] for k in (
+            "triples", "contexts", "features", "prop_contexts", "concepts",
+            "props", "vocab", "candidates", "scores", "alignments", "clusters",
+            "params", "threshold", *KG_TABLES,
+        )},
+        "accepted": res["alignments"].filter(F.col("accepted")),
         "metrics": ledger.metrics,
-        "params": params,
         "max_types": cfg.max_types,
-        "threshold": threshold,
         "vector_mode": vector_mode,
         "unstaged_timings": timings,
-        **kg,
     }

@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(ram_bytes: int | None = None) -> str:
+    """The driver heap when SPARK_DRIVER_MEM is unset: min(16g, RAM/3)
+    of this machine's physical memory (local mode runs every executor
+    inside the driver JVM, and a heap larger than the box lets a second
+    JVM beside it push the machine out of memory)."""
+    if ram_bytes is None:
+        ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, ram_bytes // 3 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "veealign_spark",
     cores: int | None = None,
@@ -64,7 +74,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
