@@ -579,10 +579,8 @@ def q_kg_blocked_candidates(spark, sf_dir):
     from veealign_spark.sources.transcripts import extract_mentions, mentions_to_triples
 
     triples = mentions_to_triples(extract_mentions(tr))
-    concepts = concepts_from_triples(triples)
-    c1 = cand.with_norm(concepts.filter(F.col("src") == "src1"))
-    c2 = cand.with_norm(concepts.filter(F.col("src") == "src2"))
-    return cand.blocked_candidates(c1, c2)
+    concepts = concepts_from_triples(triples).filter(F.col("src").isin("src1", "src2"))
+    return cand.blocked_candidates_multi(concepts)
 
 
 def q_kg_extract_triples(spark, sf_dir):

@@ -21,6 +21,11 @@ standing source count (clones of src2 under new prefixes) to show the
 curve.
 
 Usage: python scripts/bench_incremental.py [copies] [n_clones] [out_json]
+
+The staged corpora, checkpoints and (by default) the JSON result go
+under `.bench_work/incremental/` in the checkout (git-ignored). The
+session takes SPARK_GRAFT_CPUS cores, default every core this process
+may run on.
 """
 
 from __future__ import annotations
@@ -30,14 +35,16 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 COPIES = int(sys.argv[1]) if len(sys.argv) > 1 else 3000
 N_CLONES = int(sys.argv[2]) if len(sys.argv) > 2 else 0
-OUT = sys.argv[3] if len(sys.argv) > 3 else "/tmp/bench_incremental.json"
+WORK = os.path.join(ROOT, ".bench_work", "incremental")
+OUT = sys.argv[3] if len(sys.argv) > 3 else os.path.join(WORK, "bench_incremental.json")
 
 
 def _clone(tdf, new_src: str):
@@ -50,11 +57,15 @@ def main() -> None:
     from veealign_spark.plans.incremental import incremental_update
     from veealign_spark.plans.pipeline import PipelineConfig, run_pipeline
 
-    spark = bench.fresh_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    path = bench.stage_kg_input(spark, COPIES)
+    os.makedirs(WORK, exist_ok=True)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    spark = bench.fresh_spark(int(cores))
+    path = bench.stage_kg_input(
+        spark, COPIES, path=os.path.join(WORK, f"tr_{COPIES}")
+    )
     base_tdf = spark.read.parquet(path)
 
-    std_path = f"/tmp/veealign_bench_std_{COPIES}_{N_CLONES}"
+    std_path = os.path.join(WORK, f"std_{COPIES}_{N_CLONES}")
     if not os.path.exists(os.path.join(std_path, "_SUCCESS")):
         std = base_tdf
         for i in range(N_CLONES):
@@ -62,7 +73,7 @@ def main() -> None:
         std.repartition(256).write.mode("overwrite").parquet(std_path)
     standing_tdf = spark.read.parquet(std_path)
 
-    inc_path = f"/tmp/veealign_bench_incnew_{COPIES}"
+    inc_path = os.path.join(WORK, f"incnew_{COPIES}")
     if not os.path.exists(os.path.join(inc_path, "_SUCCESS")):
         _clone(base_tdf, "srcnew").repartition(128).write.mode(
             "overwrite"
@@ -73,7 +84,7 @@ def main() -> None:
     n_inc = inc_tdf.count()
 
     cfg = PipelineConfig(
-        blocking="blocked", checkpoint_dir=f"/tmp/inc_ckpt_{COPIES}_{N_CLONES}"
+        blocking="blocked", checkpoint_dir=os.path.join(WORK, f"ckpt_{COPIES}_{N_CLONES}")
     )
     t0 = time.time()
     standing = run_pipeline(spark, standing_tdf, cfg)
@@ -82,7 +93,7 @@ def main() -> None:
 
     # one-time warmup of the scoring path (first kernel-scoring job of
     # a session pays ~30s of broadcast/codegen/worker spin-up that the
-    # resumed standing build skips; measured in /tmp/ab2: first score
+    # resumed standing build skips; measured in an A/B run: first score
     # job 40s, every later one 8-10s regardless of plan variant).
     # Without this the cost lands on whichever timed run goes first.
     warm_tdf = inc_tdf.limit(20000).withColumn(

@@ -52,9 +52,8 @@ def test_lexicon_blocking_covers_matches(spark, ml_pair):
     lex = spark.createDataFrame(
         list(TRANSLATIONS.items()), "token string, canonical string"
     )
-    c1 = cand.with_norm(concepts.filter(F.col("src") == "src1"))
-    c2 = cand.with_norm(concepts.filter(F.col("src") == "src2"))
-    blocked = cand.blocked_candidates(c1, c2, lexicon=lex)
+    both = concepts.filter(F.col("src").isin("src1", "src2"))
+    blocked = cand.blocked_candidates_multi(both, lexicon=lex)
     pairs = {(r["ent1"], r["ent2"]) for r in blocked.collect()}
     gold = ml_pair["gold"]
     concept_gold = [

@@ -50,10 +50,10 @@ def test_salted_blocking_spreads_hot_key(spark):
     right = [("src2", f"hot_term_{i}", None) for i in range(50)]
     c1 = spark.createDataFrame(hot + cold, "src string, id string, label string")
     c2 = spark.createDataFrame(right, "src string, id string, label string")
-    n1, n2 = cand.with_norm(c1), cand.with_norm(c2)
+    both = c1.unionByName(c2)
 
-    blocked = cand.blocked_candidates(n1, n2, hot_key_threshold=50, n_salt=8)
-    unsalted = cand.blocked_candidates(n1, n2, hot_key_threshold=10**9)
+    blocked = cand.blocked_candidates_multi(both, hot_key_threshold=50, n_salt=8)
+    unsalted = cand.blocked_candidates_multi(both, hot_key_threshold=10**9)
     assert {tuple(r) for r in blocked.collect()} == {
         tuple(r) for r in unsalted.collect()
     }
@@ -62,7 +62,7 @@ def test_salted_blocking_spreads_hot_key(spark):
     # inspect the salt distribution of the internal key table
     from veealign_spark.operators.candidates import _blocking_keys
 
-    k1 = _blocking_keys(n1, None)
+    k1 = _blocking_keys(cand.with_norm(c1), None)
     freq = k1.groupBy("block_key").count().filter(F.col("count") > 50)
     hot_keys = {r["block_key"] for r in freq.collect()}
     assert "hot" in hot_keys

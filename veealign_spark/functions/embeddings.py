@@ -21,7 +21,6 @@ the fixture generator, and the numpy oracle all call it.
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -29,18 +28,6 @@ import pandas as pd
 
 DEFAULT_DIM = 32
 UNK = "<UNK>"
-
-# Character-trigram augmentation weight. At 0 (default) a token's
-# vector is the pure word-hash gaussian — unrelated tokens are
-# orthogonal in expectation, which caps recall at what exact token
-# overlap can reach (a real USE model also embeds morphological
-# variants near each other). At w>0 each token additionally carries a
-# boundary-padded char-trigram gaussian sum, so 'reviewer'/'review' or
-# 'organisation'/'organization' get positive cosine while unrelated
-# tokens stay near-orthogonal. Read from the environment at import so
-# Spark's Python workers (which re-import this module) agree with the
-# driver; set it BEFORE the session starts.
-TRIGRAM_W = float(os.environ.get("VEEALIGN_EMBED_TRIGRAM_W", "0.0"))
 
 # Cross-lingual stand-in (the reference's multifarm track uses the
 # *multilingual* USE model, which embeds translations near each other
@@ -72,21 +59,7 @@ def canonical_token(token: str) -> str:
 def _token_vec(token: str, dim: int) -> np.ndarray:
     token = canonical_token(token)
     seed = int.from_bytes(hashlib.md5(token.encode("utf-8")).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    v = rng.standard_normal(dim)
-    if TRIGRAM_W > 0.0 and len(token) >= 3:
-        padded = f"^{token}$"
-        tris = sorted({padded[i:i + 3] for i in range(len(padded) - 2)})
-        acc = np.zeros(dim)
-        for tr in tris:
-            s = int.from_bytes(
-                hashlib.md5(f"tri:{tr}".encode("utf-8")).digest()[:8], "big"
-            )
-            acc += np.random.default_rng(s).standard_normal(dim)
-        # /sqrt(n) keeps the trigram component at unit expected scale,
-        # so TRIGRAM_W is a clean word-vs-subword mixing knob
-        v = v + TRIGRAM_W * (acc / np.sqrt(len(tris)))
-    return v
+    return np.random.default_rng(seed).standard_normal(dim)
 
 
 def embed_terms_np(terms: list[str], dim: int = DEFAULT_DIM) -> np.ndarray:

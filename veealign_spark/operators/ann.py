@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from veealign_spark.functions.text_norm import cosine_expr
+from veealign_spark.operators.dedup import _spread_if_narrow
 
 
 # ---------------------------------------------------------------------------
@@ -71,17 +72,6 @@ def _pair_cosine(qv, cv, dim: int | None):
     if dim is None:
         return cosine_expr(qv, cv)
     return _cos_pd(dim)(qv, cv)
-
-
-def _spread_if_narrow(df: DataFrame) -> DataFrame:
-    """Round-robin a narrowly-partitioned table across the cluster only
-    when scan parallelism is short (a small parquet corpus arrives as
-    one split; per-pair scoring work then serializes on one task). A
-    wide scan passes through untouched — no corpus-sized reshuffle."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(par // 2, 2):
-        return df.repartition(par)
-    return df
 
 
 def cosine_topk(

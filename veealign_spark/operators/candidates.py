@@ -3,26 +3,29 @@
 The reference takes the full itertools.product of the two concept
 universes (data_preprocessing.py:53-54) — O(n1*n2) pairs is fine at
 OAEI fixture scale (~100 concepts a side) and fatal at 10^12-turn
-scale. This module provides both:
+scale. Both generators take ONE concept table holding every source and
+emit each cross-source pair once, as data (self-join on src1 < src2,
+ent1 from the lexicographically smaller source):
 
-- `cross_candidates`: the faithful cross product (fixture scale, and
-  the recall oracle for blocking tests);
-- `blocked_candidates`: SparkER-style token blocking (cf. "SparkER:
-  Scaling Entity Resolution in Spark", EDBT 2019 — PAPERS.md): each
-  entity emits one blocking key per normalized-name token (plus its
-  top root ancestor as a context key), candidates are the equi-join on
-  key, deduplicated. Head tokens (stopword-ish, Zipf-hot) are the skew
-  hazard: keys whose frequency exceeds `hot_key_threshold` are salted
-  — the hot side gets pmod(xxhash64(id), n_salt) appended, the other
-  side is replicated across all salt values (explicit replicate
-  pattern; AQE skew-join remains on as the fallback). This is the
-  north_rule "skew handled explicitly" clause.
+- `cross_candidates_multi`: the faithful cross product (fixture scale,
+  and the recall oracle for blocking tests);
+- `blocked_candidates_multi`: SparkER-style token blocking (cf.
+  "SparkER: Scaling Entity Resolution in Spark", EDBT 2019 —
+  PAPERS.md): each entity emits one blocking key per normalized-name
+  token (plus its top root ancestor as a context key), candidates are
+  the equi-join on key, deduplicated. Head tokens (stopword-ish,
+  Zipf-hot) are the skew hazard: keys whose frequency over all sources
+  exceeds `hot_key_threshold` are salted — one join side gets
+  pmod(xxhash64(key), n_salt) appended, the other is replicated across
+  all salt values (explicit replicate pattern; AQE skew-join remains on
+  as the fallback). This is the north_rule "skew handled explicitly"
+  clause.
 
 Blocking recall contract: any pair sharing >=1 normalized name token
 or a top ancestor survives. Pairs with zero lexical/context overlap
 are exactly the ones the name-embedding kernel scores ~0, so blocking
-loses only pairs the threshold would reject (verified by
-tests/test_candidates.py equivalence test).
+loses only pairs the threshold would reject. The emitted set is pinned
+against a pure-Python reference by tests/test_candidates.py.
 """
 
 from __future__ import annotations
@@ -42,13 +45,6 @@ def with_norm(concepts: DataFrame) -> DataFrame:
     base = F.coalesce(F.col("label"), F.col("id"))
     return concepts.withColumn("norm", norm_label_col(base)).withColumn(
         "key", F.concat_ws("#", "src", "id")
-    )
-
-
-def cross_candidates(c1: DataFrame, c2: DataFrame) -> DataFrame:
-    """J1 faithful cross product of two concept universes -> (ent1, ent2)."""
-    return c1.select(F.col("key").alias("ent1")).crossJoin(
-        c2.select(F.col("key").alias("ent2"))
     )
 
 
@@ -97,53 +93,6 @@ def _blocking_keys(
     return toks.filter(F.col("block_key") != "").dropDuplicates()
 
 
-def blocked_candidates(
-    c1: DataFrame,
-    c2: DataFrame,
-    anc1: DataFrame | None = None,
-    anc2: DataFrame | None = None,
-    hot_key_threshold: int = 1000,
-    n_salt: int = 16,
-    lexicon: DataFrame | None = None,
-) -> DataFrame:
-    """J1' blocked candidate join with explicit hot-key salting."""
-    # k1 feeds the census and the join side — materialize once (see
-    # blocked_candidates_multi); k2 is single-use
-    k1 = _blocking_keys(c1, anc1, lexicon).localCheckpoint(eager=False)
-    k2 = _blocking_keys(c2, anc2, lexicon)
-
-    # hot-key census on the (assumed larger) side 1; at cluster scale
-    # this is a cheap pre-aggregation compared to the join it protects
-    freq = k1.groupBy("block_key").count()
-    hot = freq.filter(F.col("count") > hot_key_threshold).select(
-        "block_key", F.lit(True).alias("is_hot")
-    )
-
-    k1s = (
-        k1.join(F.broadcast(hot), "block_key", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("is_hot"), F.pmod(F.xxhash64("key"), F.lit(n_salt))
-            ).otherwise(F.lit(0)),
-        )
-        .drop("is_hot")
-    )
-    salts = F.when(
-        F.col("is_hot"), F.sequence(F.lit(0), F.lit(n_salt - 1))
-    ).otherwise(F.array(F.lit(0)))
-    k2s = (
-        k2.join(F.broadcast(hot), "block_key", "left")
-        .withColumn("salt", F.explode(salts.cast("array<bigint>")))
-        .drop("is_hot")
-    )
-    return (
-        k1s.join(k2s.withColumnRenamed("key", "key2"), ["block_key", "salt"])
-        .select(F.col("key").alias("ent1"), F.col("key2").alias("ent2"))
-        .dropDuplicates()
-    )
-
-
 def blocked_candidates_multi(
     concepts: DataFrame,
     top_ancestor: DataFrame | None = None,
@@ -153,8 +102,8 @@ def blocked_candidates_multi(
     touch_sources: list[str] | None = None,
 ) -> DataFrame:
     """J1' across ALL source pairs in one self-join (pairs-as-data,
-    like cross_candidates_multi), with the same explicit hot-key
-    salting: the assigned side hashes hot keys into n_salt buckets, the
+    like cross_candidates_multi), with explicit hot-key salting: the
+    assigned side hashes hot keys into n_salt buckets, the
     replicated side explodes across all of them, so a Zipf-hot block
     key never lands on a single task.
 

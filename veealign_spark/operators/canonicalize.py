@@ -30,7 +30,6 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
     driver_threshold: int = 500_000,
-    n_edges: int | None = None,
 ) -> DataFrame:
     """edges(ent1, ent2) -> (entity, canon_id) with canon_id = the
     lexicographic min entity of the component.
@@ -48,13 +47,7 @@ def connected_components(
     limit(threshold+1).collect() — at most threshold+1 Rows ever reach
     the driver, an under-threshold graph is already in hand (no second
     pass), and an over-threshold one routes to the distributed loop
-    after a short-circuited scan instead of paying a full count. A
-    caller that already knows the edge count (e.g. a pipeline stage
-    census) can pass `n_edges` to skip the probe entirely."""
-    if n_edges is not None:
-        if n_edges <= driver_threshold:
-            return _driver_union_find(edges)
-        return _distributed_cc(edges, max_iter)
+    after a short-circuited scan instead of paying a full count."""
     # Arrow transfer (toPandas) instead of py4j Row collect: the probe
     # moves the same <= threshold+1 rows, minus the Row-object overhead
     # (measured ~2x on a 140k-edge graph)
@@ -67,6 +60,8 @@ def connected_components(
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
+    """Unbounded driver union-find: the reference the distributed
+    loop is tested against."""
     pdf = edges.select("ent1", "ent2").toPandas()
     return _union_find_pairs(
         pdf["ent1"].tolist(), pdf["ent2"].tolist(), edges.sparkSession
@@ -174,6 +169,20 @@ def _distributed_cc(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     return labels.select("entity", F.col("label").alias("canon_id"))
 
 
+def _kg_views(canon: DataFrame) -> dict[str, DataFrame]:
+    """kg_triples (the canonical triple table itself), kg_entities and
+    kg_edges, all derived from `canon` (subj, pred, obj, kind)."""
+    kg_entities = (
+        canon.select(F.col("subj").alias("entity"))
+        .unionByName(canon.select(F.col("obj").alias("entity")))
+        .distinct()
+    )
+    kg_edges = canon.filter(F.col("kind") == "Subclass").select(
+        F.col("subj").alias("child"), F.col("obj").alias("parent")
+    )
+    return {"kg_triples": canon, "kg_entities": kg_entities, "kg_edges": kg_edges}
+
+
 def materialize_kg(
     triples: DataFrame, clusters: DataFrame
 ) -> dict[str, DataFrame]:
@@ -210,15 +219,7 @@ def materialize_kg(
         # join + dedup once instead of once per derived table
         .localCheckpoint(eager=False)
     )
-    kg_entities = (
-        canon.select(F.col("subj").alias("entity"))
-        .unionByName(canon.select(F.col("obj").alias("entity")))
-        .distinct()
-    )
-    kg_edges = canon.filter(F.col("kind") == "Subclass").select(
-        F.col("subj").alias("child"), F.col("obj").alias("parent")
-    )
-    return {"kg_triples": canon, "kg_entities": kg_entities, "kg_edges": kg_edges}
+    return _kg_views(canon)
 
 
 def materialize_kg_delta(
@@ -274,15 +275,7 @@ def materialize_kg_delta(
     )
     new_rows = materialize_kg(new_triples, clusters)["kg_triples"]
     canon = remapped.unionByName(new_rows).dropDuplicates()
-    kg_entities = (
-        canon.select(F.col("subj").alias("entity"))
-        .unionByName(canon.select(F.col("obj").alias("entity")))
-        .distinct()
-    )
-    kg_edges = canon.filter(F.col("kind") == "Subclass").select(
-        F.col("subj").alias("child"), F.col("obj").alias("parent")
-    )
-    return {"kg_triples": canon, "kg_entities": kg_entities, "kg_edges": kg_edges}
+    return _kg_views(canon)
 
 
 def one_to_one_filter(

@@ -51,17 +51,18 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-def _spread_if_narrow(documents: DataFrame) -> DataFrame:
-    """Spread a narrowly-partitioned doc table across the cluster ONLY
-    when scan parallelism is actually short (compressed doc tables
-    sometimes arrive as a few tiny files = too few partitions for
-    expression-CPU-heavy per-row work); when the scan is already wide,
-    an unconditional repartition reshuffles the whole corpus for
-    nothing — the 100 TB anti-pattern."""
-    par = documents.sparkSession.sparkContext.defaultParallelism
-    if documents.rdd.getNumPartitions() < max(par // 2, 2):
-        return documents.repartition(par, "doc_id")
-    return documents
+def _spread_if_narrow(df: DataFrame, *keys: str) -> DataFrame:
+    """Spread a narrowly-partitioned table across the cluster ONLY when
+    scan parallelism is actually short (compressed doc tables and small
+    parquet corpora sometimes arrive as a few tiny files = too few
+    partitions for CPU-heavy per-row work): hashed on `keys`, or
+    round-robin without them. When the scan is already wide, an
+    unconditional repartition reshuffles the whole corpus for nothing —
+    the 100 TB anti-pattern."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < max(par // 2, 2):
+        return df.repartition(par, *keys)
+    return df
 
 
 def doc_shingles(documents: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
@@ -71,7 +72,7 @@ def doc_shingles(documents: DataFrame, n: int = 3, distinct: bool = True) -> Dat
     grams = shingles_col(F.col("text"), n)
     if distinct:
         grams = F.array_distinct(grams)
-    docs = _spread_if_narrow(documents)
+    docs = _spread_if_narrow(documents, "doc_id")
     return docs.select("doc_id", F.explode(grams).alias("shingle"))
 
 
@@ -206,7 +207,7 @@ def simhash_fingerprints(documents: DataFrame, n_bits: int = 16) -> DataFrame:
     in-task. The corpus repartition is conditional (guard shared with
     doc_shingles): only a narrow scan is spread, a wide corpus is
     never reshuffled before this map-side-combinable aggregate."""
-    docs = _spread_if_narrow(documents)
+    docs = _spread_if_narrow(documents, "doc_id")
     toks = docs.select(
         "doc_id",
         F.explode(F.array_distinct(tokens_col(F.col("text")))).alias("tok"),

@@ -43,6 +43,9 @@ from veealign_spark.functions.text_norm import norm_label_col, normalize_term
 from veealign_spark.operators import adaptive, kernel_np
 from veealign_spark.operators.kernel_np import KernelParams
 
+# Domain and range slots per property context (the K10 prop-list pad).
+MAX_PROP_LEN = 16
+
 
 def term_universe(
     triples: DataFrame,
@@ -474,14 +477,13 @@ def encode_features(
 def encode_prop_contexts(
     prop_contexts: DataFrame,
     source: VectorSource,
-    max_prop_len: int = 16,
     label_map: DataFrame | None = None,
 ) -> DataFrame:
     """(key, self, dom, rng): the property's own name value plus dense
-    max_prop_len-slot domain and range arrays (see encode_features for
+    MAX_PROP_LEN-slot domain and range arrays (see encode_features for
     the value layout). One explode + one groupBy for all three slots
     (tagged positions)."""
-    M = max_prop_len
+    M = MAX_PROP_LEN
     base = prop_contexts.select(
         "src",
         F.concat_ws("#", "src", "prop").alias("key"),
@@ -639,7 +641,6 @@ def score_props(
     enc_props: DataFrame,
     source: VectorSource,
     params: KernelParams,
-    max_prop_len: int = 16,
     label_map: DataFrame | None = None,
 ) -> DataFrame:
     """Property pairs (K9): sum-pooled (self, domains, ranges) cosine
@@ -651,7 +652,7 @@ def score_props(
         candidates, enc_props.select("key", "self", "dom", "rng"), source, label_map
     )
     gather = source.gather()
-    M = max_prop_len
+    M = MAX_PROP_LEN
 
     def score(pdf: pd.DataFrame, p: KernelParams) -> np.ndarray:
         miss = (pdf["self1"].isna() | pdf["self2"].isna()).to_numpy()

@@ -99,7 +99,7 @@ def fingerprints(documents: DataFrame, shingle_n: int = 5) -> DataFrame:
     from veealign_spark.operators.dedup import _spread_if_narrow
 
     sh = shingles_col(F.col("text"), shingle_n)
-    documents = _spread_if_narrow(documents)
+    documents = _spread_if_narrow(documents, "doc_id")
     return documents.select(
         "doc_id",
         F.array_min(F.transform(sh, lambda s: F.md5(s))).alias("fingerprint"),

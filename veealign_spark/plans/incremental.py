@@ -215,7 +215,7 @@ def incremental_update(
     res = ledger.run({
         "triples": ((), lambda r: (
             new_triples if new_triples is not None
-            else triples_from_transcripts(cfg, new_transcripts)
+            else triples_from_transcripts(new_transcripts)
         )),
         "contexts": (("triples",), lambda r: contexts.build_contexts(
             r["triples"], bag_of_neighbours=cfg.bag_of_neighbours,

@@ -53,12 +53,7 @@ class PipelineConfig:
     emb_dim: int = 32
     threshold: float = 0.90
     blocking: str = "cross"  # "cross" (fixture) | "blocked" (scale)
-    hot_key_threshold: int = 1000
-    n_salt: int = 16
     checkpoint_dir: str | None = None
-    extractor: str = "jvm"  # "jvm" | "pandas"
-    params_seed: int = 7
-    score_partitions: int | None = None
     # Vector layout (operators/scoring.py VectorSource), chosen per run
     # by a bounded vocabulary probe: at or below this many distinct
     # terms the (indexer, matrix) pair rides a SparkContext broadcast —
@@ -101,7 +96,6 @@ class PipelineConfig:
             max_paths=self.max_paths,
             max_pathlen=self.max_pathlen,
             threshold=self.threshold,
-            seed=self.params_seed,
             init=self.kernel_init,
             ctx_gain=self.ctx_gain,
         )
@@ -255,13 +249,10 @@ def props_from_triples(triples: DataFrame) -> DataFrame:
 KG_TABLES = ("kg_triples", "kg_entities", "kg_edges")
 
 
-def triples_from_transcripts(cfg: PipelineConfig, transcripts: DataFrame) -> DataFrame:
-    extract = (
-        src_transcripts.extract_mentions
-        if cfg.extractor == "jvm"
-        else src_transcripts.extract_mentions_pandas
+def triples_from_transcripts(transcripts: DataFrame) -> DataFrame:
+    return src_transcripts.mentions_to_triples(
+        src_transcripts.extract_mentions(transcripts)
     )
-    return src_transcripts.mentions_to_triples(extract(transcripts))
 
 
 def concept_candidates(
@@ -290,10 +281,7 @@ def concept_candidates(
         .select("src", "entity", F.element_at("path", -1).alias("ancestor"))
         .dropDuplicates()
     )
-    return cand.blocked_candidates_multi(
-        concepts, anc, hot_key_threshold=cfg.hot_key_threshold, n_salt=cfg.n_salt,
-        touch_sources=touch_sources,
-    )
+    return cand.blocked_candidates_multi(concepts, anc, touch_sources=touch_sources)
 
 
 def prop_candidates(props: DataFrame, touch_sources: list[str] | None = None) -> DataFrame:
@@ -356,8 +344,8 @@ def score_candidates_stage(
 
     timings["vocab"] is the probe and the vector source's build;
     timings["encode"] is the driver-side construction of the encode and
-    scorer plans, and it also holds the shuffle stages the encoders'
-    lazy localCheckpoints run when called under AQE."""
+    scorer plans, and it also holds the shuffle stages the scorers'
+    lazy dim-table localCheckpoints run when called under AQE."""
     timings: dict[str, float] = {}
     external = (
         spark.read.parquet(cfg.external_vectors)
@@ -396,20 +384,19 @@ def score_candidates_stage(
     # One task wave, maximal Arrow batch size: per-row kernel cost is
     # uniform, so parallelism*1 partitions beat *2 (half the python
     # worker round-trips for the same core occupancy)
-    n_score = cfg.score_partitions or spark.sparkContext.defaultParallelism
+    n_score = spark.sparkContext.defaultParallelism
     candidates_df = candidates_df.repartition(n_score)
     prop_cand = prop_cand.repartition(max(n_score // 4, 2))
 
     # JVM-side embedify: features/prop contexts become fixed-shape
     # arrays before the Arrow boundary (strings never reach Python):
     # int64 index tensors on the broadcast source, pre-joined float64
-    # vectors on the pre-joined one. Entity-universe-sized dim tables,
-    # referenced twice each in the scoring joins — LAZY
-    # localCheckpoints: the RDD identity shares one computation between
-    # both references (the r5 eager+threaded form paid two extra driver
-    # jobs for the same work). Under AQE a lazy localCheckpoint still
-    # runs its plan's shuffle and broadcast stages when it is called;
-    # only the final stage waits for the scores job.
+    # vectors on the pre-joined one. Each encoder output has one
+    # reader, the scorer's per-key dim table (scoring._join_sides),
+    # which is itself a lazy localCheckpoint shared by both side joins;
+    # under AQE that checkpoint runs its plan's shuffle and broadcast
+    # stages when it is called, and only its final stage waits for the
+    # scores job.
     t0 = time.time()
 
     # Plan-construction is driver-side wall time: every DataFrame op
@@ -426,15 +413,13 @@ def score_candidates_stage(
         enc = scoring.encode_features(
             features, source, cfg.max_types, cfg.max_paths, cfg.max_pathlen,
             label_map=label_map,
-        ).localCheckpoint(eager=False)
+        )
         return scoring.score_concepts(
             candidates_df, enc, source, params, cfg.max_types, label_map=label_map
         ).withColumn("is_prop", F.lit(False))
 
     def _chain_p():
-        enc = scoring.encode_prop_contexts(
-            prop_ctx, source, label_map=label_map
-        ).localCheckpoint(eager=False)
+        enc = scoring.encode_prop_contexts(prop_ctx, source, label_map=label_map)
         return scoring.score_props(
             prop_cand, enc, source, params, label_map=label_map
         ).withColumn("is_prop", F.lit(True))
@@ -501,7 +486,7 @@ def run_pipeline(
 
     res = ledger.run({
         "triples": ((), lambda r: (
-            triples if triples is not None else triples_from_transcripts(cfg, transcripts)
+            triples if triples is not None else triples_from_transcripts(transcripts)
         )),
         "contexts": (("triples",), lambda r: contexts.build_contexts(
             r["triples"], bag_of_neighbours=cfg.bag_of_neighbours,

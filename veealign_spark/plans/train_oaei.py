@@ -156,7 +156,7 @@ def prepare_training(
     }
     base = default_params(
         emb_dim=cfg.emb_dim, n_types=max_types, max_paths=P, max_pathlen=L,
-        threshold=cfg.threshold, seed=cfg.params_seed, init=cfg.kernel_init,
+        threshold=cfg.threshold, init=cfg.kernel_init,
         ctx_gain=cfg.ctx_gain,
     )
     base.weighted_sum = cfg.weighted_sum
