@@ -17,8 +17,12 @@ Both sides read the IDENTICAL staged parquet corpus (the staging marker
 makes whoever runs first stage it; the ontology constants are unchanged
 between the trees — verified by `git diff <ref> HEAD -- bench.py`).
 
+The pinned commit's worktree and the result JSON go under
+`.bench_work/kg_ab/` in the checkout (git-ignored).
+
 Usage: python scripts/bench_kg_ab.py [--ref 0848c5b] [--iters 5]
-       [--copies 3000] [--cores <usable cores>] [--out /tmp/kg_ab.json]
+       [--copies 3000] [--cores <usable cores>]
+       [--out .bench_work/kg_ab/kg_ab.json]
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+WORK = REPO / ".bench_work" / "kg_ab"
 
 
 def run_one(tree: Path, cores: int, copies: int, warm_copies: int) -> dict:
@@ -60,10 +65,11 @@ def main() -> None:
     ap.add_argument("--copies", type=int, default=3000)
     ap.add_argument("--cores", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--warm-copies", type=int, default=150)
-    ap.add_argument("--out", default="/tmp/kg_ab.json")
+    ap.add_argument("--out", default=str(WORK / "kg_ab.json"))
     args = ap.parse_args()
 
-    ref_tree = Path(f"/tmp/kg_ab_{args.ref}")
+    WORK.mkdir(parents=True, exist_ok=True)
+    ref_tree = WORK / args.ref
     if not ref_tree.exists():
         subprocess.run(
             ["git", "worktree", "add", "--detach", str(ref_tree), args.ref],

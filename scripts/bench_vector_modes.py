@@ -15,7 +15,9 @@ distributed rank+embed-UDF+prejoin).
 
 Usage: python scripts/bench_vector_modes.py [V1,V2,...] (default
 250000,1000000,3000000), 2 runs per (V, mode), best reported. The
-session takes every core this process may run on (nproc).
+session takes every core this process may run on (nproc). The result
+JSON goes to `.bench_work/vector_modes.json` in the checkout
+(git-ignored).
 """
 
 from __future__ import annotations
@@ -26,7 +28,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -89,7 +92,9 @@ def main() -> None:
         )
         out["sizes"][str(v)] = cell
     print(json.dumps(out))
-    Path("/tmp/vector_modes.json").write_text(json.dumps(out, indent=1))
+    out_path = ROOT / ".bench_work" / "vector_modes.json"
+    out_path.parent.mkdir(exist_ok=True)
+    out_path.write_text(json.dumps(out, indent=1))
 
 
 if __name__ == "__main__":

@@ -28,8 +28,10 @@ Invariants preserved from the reference:
   default).
 
 This module is driver/executor-agnostic pure numpy: the Spark scoring
-operator (scoring.py) calls `score_batch` inside an Arrow pandas UDF,
-and the parity tests call it directly as the single-node oracle.
+operator (scoring.py) calls the per-side functions (concept_reps_emb,
+cosine) inside its Arrow UDF, once per distinct entity of a batch; the
+per-pair entry points (score_*_pairs, direct_cosine) are the
+single-node oracle the parity tests and the benchmark gate call.
 """
 
 from __future__ import annotations
@@ -158,27 +160,21 @@ def masked_softmax(x: np.ndarray) -> np.ndarray:
     return e / e.sum(axis=-1, keepdims=True)
 
 
-def _cos(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+def cosine(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise cosine with the eps denominator clamp (K8)."""
     num = (a * b).sum(-1)
     den = np.linalg.norm(a, axis=-1) * np.linalg.norm(b, axis=-1)
     return num / np.maximum(den, EPS)
 
 
-def _contextual_rep(
-    node_idx: np.ndarray,      # [B]
-    feat_idx: np.ndarray,      # [B, T, P, L]
-    emb: np.ndarray,           # [V, d]  row 0 all-zero
-    p: KernelParams,
-) -> np.ndarray:
-    return _contextual_rep_emb(emb[node_idx], emb[feat_idx], p)
-
-
-def _contextual_rep_emb(
+def concept_reps_emb(
     node: np.ndarray,          # [B, d]
     feat: np.ndarray,          # [B, T, P, L, d]  pad/UNK = zero vec
     p: KernelParams,
 ) -> np.ndarray:
-    """Embedding-input core of K2-K8: identical math whether the
+    """One side's representation (K2-K8, up to the Siamese cosine):
+    [B, proj]. It depends on that side's entity only, so a batch of
+    pairs needs it once per distinct entity. Identical math whether the
     vectors were gathered from a broadcast matrix (index path) or
     pre-joined onto the rows (distributed-vocabulary path)."""
     # K2: path attention logits = sum over tokens of node . token
@@ -219,9 +215,9 @@ def score_concept_pairs(
     """Siamese concept-pair scores in [-1, 1] (K1-K8)."""
     if len(nodes) == 0:
         return np.zeros(0, dtype=np.float64)
-    r0 = _contextual_rep(nodes[:, 0], features[:, 0], emb, p)
-    r1 = _contextual_rep(nodes[:, 1], features[:, 1], emb, p)
-    return _cos(r0, r1)
+    r0 = concept_reps_emb(emb[nodes[:, 0]], emb[features[:, 0]], p)
+    r1 = concept_reps_emb(emb[nodes[:, 1]], emb[features[:, 1]], p)
+    return cosine(r0, r1)
 
 
 def score_concept_pairs_emb(
@@ -234,9 +230,9 @@ def score_concept_pairs_emb(
     identical output) to score_concept_pairs."""
     if len(node_vecs) == 0:
         return np.zeros(0, dtype=np.float64)
-    r0 = _contextual_rep_emb(node_vecs[:, 0], feat_vecs[:, 0], p)
-    r1 = _contextual_rep_emb(node_vecs[:, 1], feat_vecs[:, 1], p)
-    return _cos(r0, r1)
+    r0 = concept_reps_emb(node_vecs[:, 0], feat_vecs[:, 0], p)
+    r1 = concept_reps_emb(node_vecs[:, 1], feat_vecs[:, 1], p)
+    return cosine(r0, r1)
 
 
 def score_property_pairs(
@@ -261,9 +257,9 @@ def score_property_pairs_emb(
         return np.zeros(0, dtype=np.float64)
     w_r = 1.0 - p.prop_weight - p.domain_weight
     return (
-        p.prop_weight * _cos(agg[:, 0, 0], agg[:, 1, 0])
-        + p.domain_weight * _cos(agg[:, 0, 1], agg[:, 1, 1])
-        + w_r * _cos(agg[:, 0, 2], agg[:, 1, 2])
+        p.prop_weight * cosine(agg[:, 0, 0], agg[:, 1, 0])
+        + p.domain_weight * cosine(agg[:, 0, 1], agg[:, 1, 1])
+        + w_r * cosine(agg[:, 0, 2], agg[:, 1, 2])
     )
 
 
@@ -272,4 +268,4 @@ def direct_cosine(v1: np.ndarray, v2: np.ndarray) -> np.ndarray:
     lacking context. Implements the reference's *intent* (train.py:
     188-192: sim >= threshold) rather than the test.py:366 stale-score
     bug — Quirk Q3 in SURVEY.md."""
-    return _cos(v1, v2)
+    return cosine(v1, v2)

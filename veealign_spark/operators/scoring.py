@@ -5,11 +5,15 @@ Dataflow: contexts are encoded JVM-side into fixed-shape arrays
 (encode_features / encode_prop_contexts — J5 "embedify" as a join
 against the vocabulary, label substitution P2 included), candidates
 (ent1, ent2) are hash-joined to the per-key encoded table once per
-side (J6), and one `mapInPandas` per entity kind streams the Arrow
+side (J6), and one `mapInArrow` per entity kind streams the Arrow
 batches through the pure-numpy kernel (kernel_np, K1-K9). Strings
-never cross into Python. A pair with a context-less side takes the
-direct raw-name-cosine route (A6, the KeyError fallback of
-train.py:384-397).
+never cross into Python, and no per-row Python object is made: the
+matcher is Siamese (a side's representation depends on its own entity
+only, train.py:335-338), so each batch dictionary-encodes its entity
+keys, reads each distinct entity's columns once as flat Arrow values,
+encodes it once, and indexes the pairs into those representations for
+the cosines. A pair with a context-less side takes the direct
+raw-name-cosine route (A6, the KeyError fallback of train.py:384-397).
 
 Where a token's vector comes from is a VectorSource, chosen by
 vocabulary size (PipelineConfig.vocab_broadcast_threshold):
@@ -33,7 +37,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -369,25 +373,26 @@ class VectorSource:
         return cells if self.bc is not None else F.flatten(cells)
 
     def gather(self):
-        """Executor-side step: the two sides' batch columns -> float64
-        [B, 2, *shape, d] in one allocation, each side's slice
-        contiguous — the layout kernel_np's index entry points gather
-        (emb[idx] per side), so the broadcast source scores
-        bit-identically. The returned function holds only the broadcast
-        handle and d, never a DataFrame, so it pickles into the UDF."""
+        """Executor-side reader: one side's Arrow column, nulls already
+        dropped -> float64 [n, *shape, d]. A list column is read as its
+        flat values (ListArray.flatten, no per-row objects) reshaped; an
+        int64 index column is read as it is. On the broadcast source
+        the values are matrix rows, gathered as kernel_np's index entry
+        points do (emb[idx]), so both sources feed the kernel the same
+        vectors. The returned function holds only the broadcast handle
+        and d, never a DataFrame, so it pickles into the UDF."""
         d, bc = self.dim, self.bc
 
-        def both(c1, c2):
-            return np.vstack(np.concatenate([c1.to_numpy(), c2.to_numpy()]))
+        def read(col: pa.Array, shape=()) -> np.ndarray:
+            n = len(col)
+            if not pa.types.is_integer(col.type):
+                col = col.flatten()
+            vals = col.to_numpy(zero_copy_only=False)
+            if bc is None:
+                return vals.reshape(n, *shape, d)
+            return bc.value["matrix"][vals.reshape(n, *shape)]
 
-        def vectors(c1, c2, shape=()):
-            return both(c1, c2).reshape(2, -1, *shape, d).swapaxes(0, 1)
-
-        def rows(c1, c2, shape=()):
-            idx = both(c1, c2).astype(np.int64, copy=False).reshape(2, -1, *shape)
-            return bc.value["matrix"][idx].swapaxes(0, 1)
-
-        return vectors if bc is None else rows
+        return read
 
 
 # ---------------------------------------------------------------------------
@@ -581,23 +586,127 @@ def _join_sides(
     return j.select("ent1", "ent2", *[f"{c}{s}" for s in "12" for c in cols])
 
 
-def _score_batches(
-    batches: Iterator[pd.DataFrame], p_dict: dict, score
-) -> Iterator[pd.DataFrame]:
-    """Shared mapInPandas body: `score(pdf, params)` per non-empty batch."""
-    p = KernelParams.from_dict(p_dict)
-    for pdf in batches:
-        if len(pdf):
-            yield pd.DataFrame(
-                {"ent1": pdf["ent1"], "ent2": pdf["ent2"], "score": score(pdf, p)}
-            )
+class _Sides:
+    """The distinct entities of one candidate batch (rows ent1, ent2
+    plus each side's columns suffixed 1/2, as _join_sides emits them).
+
+    Every key has exactly one encoded row (_position_map groups by key;
+    the label map is deduplicated), so an entity's columns are read once,
+    from the side and row where it first occurs. The entity table lists
+    the side-1 entities first; `e1`/`e2` are each pair's two positions
+    in it."""
+
+    def __init__(self, batch: pa.RecordBatch):
+        n = batch.num_rows
+        keys = pa.concat_arrays([batch.column("ent1"), batch.column("ent2")])
+        codes = keys.dictionary_encode().indices.to_numpy()
+        _, first = np.unique(codes, return_index=True)
+        order = np.argsort(first)
+        rank = np.empty_like(order)
+        rank[order] = np.arange(len(order))
+        first = first[order]
+        k = np.searchsorted(first, n)
+        self.batch = batch
+        self.rows = (first[:k], first[k:] - n)
+        self.e1, self.e2 = rank[codes[:n]], rank[codes[n:]]
+
+    def has(self, col: str) -> np.ndarray:
+        """Per entity: whether its `col` is set (it has an encoding)."""
+        return np.concatenate([
+            self.batch.column(f"{col}{s}").is_valid().to_numpy(zero_copy_only=False)[r]
+            for s, r in zip("12", self.rows)
+        ])
+
+    def pick(self, pairs: np.ndarray):
+        """The entities on either side of the `pairs` rows, as a mask
+        over the entity table, and each of those rows' two positions
+        among them."""
+        need = np.zeros(len(self.rows[0]) + len(self.rows[1]), dtype=bool)
+        e1, e2 = self.e1[pairs], self.e2[pairs]
+        need[e1] = need[e2] = True
+        at = np.cumsum(need) - 1
+        return need, at[e1], at[e2]
+
+    def take(self, col: str, need: np.ndarray) -> pa.Array:
+        """Column `col` of the entities in `need`, one row each."""
+        k = len(self.rows[0])
+        return pa.concat_arrays([
+            self.batch.column(f"{col}{s}").take(r[m])
+            for s, r, m in zip("12", self.rows, (need[:k], need[k:]))
+        ])
 
 
-def _direct(pdf: pd.DataFrame, gather) -> np.ndarray:
-    """A6 direct route: raw name-embedding cosine (Quirk Q3 resolved to
-    the reference's intent, sim >= threshold)."""
-    v = gather(pdf["d1"], pdf["d2"])
-    return kernel_np.direct_cosine(v[:, 0], v[:, 1])
+def _siamese_scores(batch: pa.RecordBatch, read, has: str, encode, compare) -> np.ndarray:
+    """Scores of one batch: rows whose two sides both have `has` set
+    compare `encode`'s per-entity representations; the rest take the
+    A6 direct route, the raw name-embedding cosine of `d` (Quirk Q3
+    resolved to the reference's intent, sim >= threshold). `encode`
+    gets a `get(col, shape=())` reader of the picked entities."""
+    sides = _Sides(batch)
+    ok = sides.has(has)
+    hit = ok[sides.e1] & ok[sides.e2]
+    scores = np.empty(batch.num_rows, dtype=np.float64)
+    routes = (
+        (hit, encode, compare),
+        (~hit, lambda get: get("d"), kernel_np.direct_cosine),
+    )
+    for rows, rep, cmp in routes:
+        if rows.any():
+            need, a1, a2 = sides.pick(rows)
+            r = rep(lambda col, shape=(): read(sides.take(col, need), shape))
+            scores[rows] = cmp(r[a1], r[a2])
+    return scores
+
+
+def concept_batch_scores(
+    batch: pa.RecordBatch, read, p: KernelParams, max_types: int = 4
+) -> np.ndarray:
+    """K1-K8 over one batch of score_concepts' joined rows: each
+    distinct entity's contextual representation once, then the pair
+    cosines. `read` is VectorSource.gather()."""
+    shape = (max_types, p.max_paths, p.max_pathlen)
+    return _siamese_scores(
+        batch, read, "f",
+        lambda get: kernel_np.concept_reps_emb(get("n"), get("f", shape), p),
+        kernel_np.cosine,
+    )
+
+
+def prop_batch_scores(batch: pa.RecordBatch, read, p: KernelParams) -> np.ndarray:
+    """K9 over one batch of score_props' joined rows: each distinct
+    property's (self, domains, ranges) sum-pooled once — slots in
+    position order like emb[prop_features].sum(axis=-2) — then the
+    pair's three-cosine mixture."""
+    M = MAX_PROP_LEN
+    return _siamese_scores(
+        batch, read, "self",
+        lambda get: np.stack(
+            [get("self"), get("dom", (M,)).sum(axis=-2), get("rng", (M,)).sum(axis=-2)],
+            axis=1,
+        ),
+        lambda a, b: kernel_np.score_property_pairs_emb(np.stack([a, b], axis=1), p),
+    )
+
+
+def _map_scores(
+    j: DataFrame, score, source: VectorSource, params: KernelParams, *args
+) -> DataFrame:
+    """One mapInArrow over the joined rows: `score(batch, read, p,
+    *args)` per non-empty Arrow batch, keys passed through as they
+    came."""
+    read = source.gather()
+    p_dict = params.to_dict()
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        p = KernelParams.from_dict(p_dict)
+        for b in batches:
+            if b.num_rows:
+                yield pa.RecordBatch.from_arrays(
+                    [b.column("ent1"), b.column("ent2"), pa.array(score(b, read, p, *args))],
+                    names=["ent1", "ent2", "score"],
+                )
+
+    return j.mapInArrow(run, _SCORES)
 
 
 def score_concepts(
@@ -617,23 +726,7 @@ def score_concepts(
         source,
         label_map,
     )
-    gather = source.gather()
-    shape = (max_types, params.max_paths, params.max_pathlen)
-
-    def score(pdf: pd.DataFrame, p: KernelParams) -> np.ndarray:
-        miss = (pdf["f1"].isna() | pdf["f2"].isna()).to_numpy()
-        scores = np.zeros(len(pdf), dtype=np.float64)
-        if (~miss).any():
-            sub = pdf[~miss]
-            scores[~miss] = kernel_np.score_concept_pairs_emb(
-                gather(sub["n1"], sub["n2"]), gather(sub["f1"], sub["f2"], shape), p
-            )
-        if miss.any():
-            scores[miss] = _direct(pdf[miss], gather)
-        return scores
-
-    p_dict = params.to_dict()
-    return j.mapInPandas(lambda it: _score_batches(it, p_dict, score), _SCORES)
+    return _map_scores(j, concept_batch_scores, source, params, max_types)
 
 
 def score_props(
@@ -651,28 +744,4 @@ def score_props(
     j = _join_sides(
         candidates, enc_props.select("key", "self", "dom", "rng"), source, label_map
     )
-    gather = source.gather()
-    M = MAX_PROP_LEN
-
-    def score(pdf: pd.DataFrame, p: KernelParams) -> np.ndarray:
-        miss = (pdf["self1"].isna() | pdf["self2"].isna()).to_numpy()
-        scores = np.zeros(len(pdf), dtype=np.float64)
-        if (~miss).any():
-            sub = pdf[~miss]
-            # [B, side, (self, domains, ranges), d], slots sum-pooled
-            # in position order like emb[prop_features].sum(axis=-2)
-            agg = np.stack(
-                [
-                    gather(sub["self1"], sub["self2"]),
-                    gather(sub["dom1"], sub["dom2"], (M,)).sum(axis=-2),
-                    gather(sub["rng1"], sub["rng2"], (M,)).sum(axis=-2),
-                ],
-                axis=2,
-            )
-            scores[~miss] = kernel_np.score_property_pairs_emb(agg, p)
-        if miss.any():
-            scores[miss] = _direct(pdf[miss], gather)
-        return scores
-
-    p_dict = params.to_dict()
-    return j.mapInPandas(lambda it: _score_batches(it, p_dict, score), _SCORES)
+    return _map_scores(j, prop_batch_scores, source, params)

@@ -46,7 +46,7 @@ def attended_tensor(
     p: KernelParams,
 ) -> np.ndarray:
     """A[b, t, l, :] — the post-attention context stack, mirroring
-    kernel_np._contextual_rep_emb up to (and excluding) K6. Constant
+    kernel_np.concept_reps_emb up to (and excluding) K6. Constant
     w.r.t. every trainable parameter."""
     path_logits = np.einsum("bd,btpld->btpl", node, feat).sum(axis=-1)
     if p.weighted_sum:
@@ -313,7 +313,7 @@ def train_kernel(
 
 def prop_cosines(agg: np.ndarray) -> np.ndarray:
     """[B,2,3,d] sum-pooled slot vectors -> the three constant cosines
-    (same _cos as kernel_np.score_property_pairs_emb)."""
+    (same cosine as kernel_np.score_property_pairs_emb)."""
     out = np.zeros((len(agg), 3), dtype=np.float64)
     for k in range(3):
         a, b = agg[:, 0, k], agg[:, 1, k]

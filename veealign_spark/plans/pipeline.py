@@ -67,7 +67,9 @@ class PipelineConfig:
     # 1.90 at 1M, 3.99 at 3M — the broadcast layout's driver-side
     # normalize+embed+pickle grows linearly while the prejoined
     # dim-table build is flat. Crossover ~300k on that box (32 cores,
-    # 16g driver).
+    # 16g driver). On 4 cores (best of 2, one window, BENCH/PLANS.md)
+    # the ratio is 0.97-1.03 at 250k and 1.27-1.63 at 500k: the
+    # 4-core crossover sits at or below 250k.
     vocab_broadcast_threshold: int = 300_000
     # "seeded" (fixture-pinned gaussian projection) | "identity"
     # (residual rep = node + ctx_gain*context — the untrained default
@@ -383,7 +385,12 @@ def score_candidates_stage(
     # explicitly re-spread across the cluster before the kernel.
     # One task wave, maximal Arrow batch size: per-row kernel cost is
     # uniform, so parallelism*1 partitions beat *2 (half the python
-    # worker round-trips for the same core occupancy)
+    # worker round-trips for the same core occupancy). The property
+    # scorer keeps max(n // 4, 2) partitions: the scorers encode each
+    # distinct entity once per Arrow batch, so fuller batches repeat
+    # more entities; spreading the property candidates over n
+    # partitions measured no wall gain on kg_wide (4 cores) and
+    # 0.5-1 s more Python-worker CPU.
     n_score = spark.sparkContext.defaultParallelism
     candidates_df = candidates_df.repartition(n_score)
     prop_cand = prop_cand.repartition(max(n_score // 4, 2))
