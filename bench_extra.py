@@ -10,11 +10,14 @@ Modes:
       per-stage ledger metrics printed (stage-level attribution)
 
 All numbers printed as one JSON line prefixed EXTRA for easy grepping.
+SPARK_GRAFT_CPUS sets the session's core count; it defaults to the
+cores this process may run on.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -22,6 +25,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 import bench  # noqa: E402
+
+
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def capture_plans(spark, sf_dir, tag: str) -> None:
@@ -41,11 +48,8 @@ def capture_plans(spark, sf_dir, tag: str) -> None:
 
 
 def run_queries_mode(tag: str) -> None:
-    import os
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench.fresh_spark(cpus)
+    spark = bench.fresh_spark(_cpus())
     capture_plans(spark, sf_dir, tag)
     cold = bench.run_queries(spark, sf_dir)
     warm = bench.run_queries(spark, sf_dir)
@@ -59,13 +63,10 @@ def run_queries_mode(tag: str) -> None:
 
 
 def run_noop_mode(tag: str) -> None:
-    import os
-
     import __spark_entry__ as entrymod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench.fresh_spark(cpus)
+    spark = bench.fresh_spark(_cpus())
     qs = entrymod.queries()
     out = {}
     for name in bench.HEADLINE:
@@ -84,13 +85,10 @@ def run_noop_mode(tag: str) -> None:
 
 
 def run_kg_mode(copies: int) -> None:
-    import os
-
     from veealign_spark.plans.pipeline import PipelineConfig, run_pipeline
     from veealign_spark.sources.transcripts import extract_mentions
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench.fresh_spark(cpus)
+    spark = bench.fresh_spark(_cpus())
     bench.kg_throughput(spark, copies=150)  # untimed warmup (bench protocol)
     path = bench.stage_kg_input(spark, copies)
     tdf = spark.read.parquet(path)

@@ -194,3 +194,54 @@ def test_per_turn_text_invariant_on_malformed(spark):
         .reset_index(drop=True)
     )
     assert round_trip.equals(want)
+
+
+# ---------------------------------------------------------------------------
+# The `_` prefilter before the JVM regex must be exact: every predicate
+# alternative of MENTION_PATTERN contains `_`, so dropping turns without
+# one may lose no mention. The pandas path runs Python `re` over every
+# turn with no prefilter, so it is the reference.
+# ---------------------------------------------------------------------------
+
+def _prefilter_sdf(spark):
+    rows = [
+        # `_` only in conv_id: the text has none and cannot match
+        ("srcB_x_c000001", 0, "Alpha subclassof Beta and relx Gamma"),
+        # `_` only in a word that is not a predicate
+        ("srcB_c000002", 0, "see my_notes for Alpha relates Beta"),
+        ("srcB_c000002", 1, "Alpha subclassof my_Beta"),
+        # `_` inside a subject or object, with each predicate family
+        ("srcB_c000003", 0, "Big_Alpha subclass_of Small_Beta"),
+        ("srcB_c000003", 1, "snake_case_x rel_has_part Other_y"),
+        ("srcB_c000003", 2, "Node_1 attr_weight_kg Value_2"),
+        # tabs and repeated spaces between the tokens
+        ("srcB_c000004", 0, "Alpha\tsubclass_of  Beta"),
+        ("srcB_c000004", 1, "Gamma \t attr_size\t\tDelta   and  Eps rel_r \t Zeta"),
+        # several mentions of all three families in one turn
+        ("srcB_c000005", 0, "A subclass_of B, C rel_r D; E attr_a F"),
+        # attr_ and subclass_of without rel_ anywhere in the turn
+        ("srcB_c000006", 0, "Foo attr_colour Bar"),
+        ("srcB_c000006", 1, "Foo subclass_of Bar"),
+        # a bare `_` and an incomplete mention
+        ("srcB_c000007", 0, "_"),
+        ("srcB_c000007", 1, "Alpha subclass_of"),
+        # null and empty text
+        ("srcB_c000008", 0, None),
+        ("srcB_c000008", 1, ""),
+    ]
+    return spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+
+
+def test_underscore_prefilter_is_exact(spark):
+    df = _prefilter_sdf(spark)
+    cols = ["conv_id", "turn_idx", "src", "subj", "pred", "obj"]
+    jvm = st.extract_mentions(df)
+    a = jvm.select(*cols).toPandas().sort_values(cols).reset_index(drop=True)
+    b = (st.extract_mentions_pandas(df).select(*cols).toPandas()
+         .sort_values(cols).reset_index(drop=True))
+    assert a.equals(b)
+    assert set(a["pred"].str.split("_").str[0]) == {"subclass", "rel", "attr"}
+    assert len(a) == 11
+    # the prefilter is in the executed plan
+    plan = jvm._jdf.queryExecution().executedPlan().toString()
+    assert "instr(text" in plan, plan

@@ -596,3 +596,18 @@ def test_arrow_cosine_and_buckets_bit_equal_sql_fold(spark):
         F.element_at(ann._buckets_pd(dim, 10, [11])(F.col("embedding")), 1).alias("b"),
     ).toPandas().sort_values("vec_id")
     assert (bref["b"].to_numpy() == bgot["b"].to_numpy()).all()
+
+
+def test_empty_match_graph_runs_no_python(spark):
+    """An empty match graph takes the local union-find path and comes back
+    as an empty LocalRelation: no PythonRDD in its lineage."""
+    from veealign_spark.operators import canonicalize
+
+    edges = spark.range(0).select(
+        F.lit("a").alias("ent1"), F.lit("b").alias("ent2")
+    )
+    cc = canonicalize.connected_components(edges)
+    lineage = cc._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert cc.schema.simpleString() == "struct<entity:string,canon_id:string>"
+    assert cc.count() == 0

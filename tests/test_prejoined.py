@@ -190,3 +190,17 @@ def test_sources_agree_on_labels_and_direct_routes(spark, edge_case_tables):
     # coded ids match their counterparts only through their labels
     coded = {f"src2#{c}" for c in t["codes"].values()}
     assert len({e2 for _, e2 in ab} & coded) == len(coded), ab
+
+
+def test_broadcast_vector_table_runs_no_python(spark):
+    """VectorSource.broadcast's (norm, val) table is a LocalRelation:
+    its lineage holds no PythonRDD, so building it starts no Python
+    worker, and its rows are exactly the broadcast indexer."""
+    emb = scoring.EmbBroadcast.from_terms(
+        spark, ["Alpha", "beta_gamma", "Delta Epsilon", "alpha"], dim=8
+    )
+    table = scoring.VectorSource.broadcast(spark, emb).table
+    lineage = table._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert table.schema.simpleString() == "struct<norm:string,val:bigint>"
+    assert dict(table.collect()) == emb.bc.value["indexer"]

@@ -22,6 +22,7 @@ entity-universe-sized case with zero shuffle rounds.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -87,15 +88,9 @@ def _union_find_pairs(e1: list, e2: list, spark) -> DataFrame:
             parent[hi] = lo
         parent.setdefault(a, a)
         parent.setdefault(b, b)
-    if not parent:
-        return spark.createDataFrame([], "entity string, canon_id string")
-    import pandas as pd
-
-    out = pd.DataFrame(
-        {"entity": list(parent), "canon_id": [find(x) for x in parent]}
-    )
-    # Arrow-backed createDataFrame (session enables arrow.pyspark) —
-    # the list-of-tuples path pickles every row through py4j
+    out = pa.table({"entity": list(parent), "canon_id": [find(x) for x in parent]})
+    # an Arrow table becomes a LocalRelation, empty or not; a list of
+    # tuples (or an empty pandas frame) is re-pickled by a PythonRDD
     return spark.createDataFrame(out, "entity string, canon_id string")
 
 

@@ -13,6 +13,7 @@ parallel across partitions on the scale path.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -49,8 +50,10 @@ def pr_metrics(predicted: DataFrame, gold: DataFrame) -> DataFrame:
             (1 + b2) * prec * rec / (b2 * prec + rec) if (prec + rec) else 0.0
         )
 
+    row = {"tp": tp, "fp": fp, "fn": fn, "precision": prec, "recall": rec,
+           "f1": fb(1.0), "f2": fb(2.0), "f05": fb(0.5)}
     return spark.createDataFrame(
-        [(tp, fp, fn, prec, rec, fb(1.0), fb(2.0), fb(0.5))],
+        pa.Table.from_pylist([row]),
         "tp long, fp long, fn long, precision double, recall double, f1 double, f2 double, f05 double",
     )
 
@@ -120,13 +123,16 @@ def pr_curve(
             .agg(F.sum("y").alias("tp_tot"), F.count(F.lit(1)).alias("n_tot"))
             .collect()
         )
-        off_tp, off_n, offsets = 0, 0, []
+        pids, offs_tp, offs_n, off_tp, off_n = [], [], [], 0, 0
         for r in sorted(census, key=lambda r: r["__pid"]):
-            offsets.append((r["__pid"], off_tp, off_n))
+            pids.append(r["__pid"])
+            offs_tp.append(off_tp)
+            offs_n.append(off_n)
             off_tp += r["tp_tot"]
             off_n += r["n_tot"]
         off_df = spark.createDataFrame(
-            offsets or [(0, 0, 0)], "__pid int, __off_tp long, __off_n long"
+            pa.table({"__pid": pids or [0], "__off_tp": offs_tp or [0], "__off_n": offs_n or [0]}),
+            "__pid int, __off_tp long, __off_n long",
         )
         cum = (
             parts.join(F.broadcast(off_df), "__pid")

@@ -147,11 +147,14 @@ def scalable_rank(
         .localCheckpoint(eager=True)  # pin partition ids across reuse
     )
     counts = ranked.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    offsets, acc = [], start - 1
+    pids, offs, acc = [], [], start - 1
     for r in sorted(counts, key=lambda r: r["__pid"]):
-        offsets.append((r["__pid"], acc))
+        pids.append(r["__pid"])
+        offs.append(acc)
         acc += r["c"]
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+    off_df = spark.createDataFrame(
+        pa.table({"__pid": pids or [0], "__off": offs or [0]}), "__pid int, __off long"
+    )
     return (
         ranked.join(F.broadcast(off_df), "__pid")
         .withColumn(idx_col, (F.col("__off") + F.col("__rn")).cast("long"))
@@ -239,7 +242,7 @@ def external_vec_map(external: DataFrame, keys: list[str], dim: int | None = Non
     lives under. Duplicate/shape handling delegates to
     normalize_external so both vector layouts resolve identically."""
     spark = external.sparkSession
-    tdf = spark.createDataFrame([(k,) for k in keys], "key string")
+    tdf = spark.createDataFrame(pa.table({"key": keys}), "key string")
     rows = (
         normalize_external(external, dim)
         .join(F.broadcast(tdf), "key")
@@ -335,8 +338,14 @@ class VectorSource:
     @classmethod
     def broadcast(cls, spark: SparkSession, emb: EmbBroadcast) -> "VectorSource":
         state = emb.bc.value
+        idx = state["indexer"]
+        # built from an Arrow table, which Spark holds as a LocalRelation:
+        # a list of tuples would be parallelized and re-pickled by a
+        # PythonRDD, starting a second Python daemon and one worker per
+        # core just to ship vocabulary-sized rows
         table = spark.createDataFrame(
-            list(state["indexer"].items()), "norm string, val long"
+            pa.table({"norm": list(idx), "val": list(idx.values())}),
+            "norm string, val long",
         )
         return cls(table, state["matrix"].shape[1], emb.bc)
 

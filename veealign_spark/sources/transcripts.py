@@ -12,7 +12,14 @@ obj) mentions. Two interchangeable implementations, tested equal:
   `explode` — stays inside whole-stage codegen, no Python at all.
   This is the 100 TB hot path: the scan projects only
   (conv_id, turn_idx, text), the regex runs codegen'd per row, and
-  `text` is dropped immediately after (never shuffled).
+  `text` is dropped immediately after (never shuffled). A literal
+  prefilter, `instr(text, '_') > 0`, runs before the regex: every
+  predicate alternative of MENTION_PATTERN (`subclass_of`, `rel_*`,
+  `attr_*`) contains `_`, so a turn without one cannot match and the
+  filter drops no mention. A null text gives no rows either way. On a
+  chatter-heavy corpus (kgbench's kg_redundant: ~70 % of turns) the
+  regex then sees only the turns that can carry a mention
+  (`stream_mentions` reuses this function and gets the same filter).
 - `extract_mentions_pandas`: Arrow-batched pandas UDF returning an
   array<struct> that is then exploded — the extension point for
   model-based extractors that can't be a regex (the shape the
@@ -32,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# every predicate alternative must contain `_`: extract_mentions prefilters on it
 MENTION_PATTERN = r"([A-Za-z][A-Za-z0-9_]*)\s+(subclass_of|rel_[A-Za-z0-9_]+|attr_[A-Za-z0-9_]+)\s+([A-Za-z][A-Za-z0-9_]*)"
 
 def kind_expr():
@@ -73,7 +81,10 @@ def extract_mentions(
     input columns through (e.g. `ts` for streaming event time —
     streaming can't re-join them on afterwards).
     """
-    matches = _with_src(transcripts).select(
+    # exact prefilter: every MENTION_PATTERN predicate contains `_`
+    # (module banner)
+    candidates = transcripts.filter(F.instr(F.col("text"), "_") > 0)
+    matches = _with_src(candidates).select(
         "conv_id",
         "turn_idx",
         "src",
