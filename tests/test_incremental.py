@@ -33,14 +33,20 @@ def three_source(spark, fixture_pair):
     }
 
 
-@pytest.mark.parametrize("blocking", ["cross", "blocked"])
-def test_incremental_equals_full_rerun(spark, three_source, blocking):
-    cfg = PipelineConfig(blocking=blocking)
+# a vocab_broadcast_threshold of 0 forces the pre-joined vector layout
+@pytest.mark.parametrize(
+    "blocking, vocab_broadcast_threshold",
+    [("cross", 300_000), ("blocked", 300_000), ("cross", 0), ("blocked", 0)],
+    ids=["cross", "blocked", "cross-prejoined", "blocked-prejoined"],
+)
+def test_incremental_equals_full_rerun(spark, three_source, blocking, vocab_broadcast_threshold):
+    cfg = PipelineConfig(blocking=blocking, vocab_broadcast_threshold=vocab_broadcast_threshold)
     standing = run_pipeline(spark, triples=three_source["standing"], config=cfg)
     inc = incremental_update(
         spark, standing, new_triples=three_source["new"], config=cfg
     )
     full = run_pipeline(spark, triples=three_source["full"], config=cfg)
+    assert inc["vector_mode"] == full["vector_mode"]
 
     def acc_set(res):
         return {

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import threading
 import time
@@ -127,6 +128,40 @@ def test_first_failure_reraised_and_dependents_never_start(tmp_path):
     assert started == []  # neither dependent started, not even the sibling's
     assert sibling_done.is_set()  # the running sibling finished before the raise
     assert (tmp_path / "metrics.json").exists()
+
+
+# -- the staged stages of each entry point ------------------------------
+
+BATCH_STAGES = {
+    "triples", "contexts", "prop_contexts", "vocab", "features", "candidates",
+    "scores", "alignments", "clusters", "kg_triples", "kg_entities", "kg_edges",
+}
+
+
+def test_staged_stage_sets(spark, fixture_pair, tmp_path):
+    """Which stages each entry point materializes. A batch run stages
+    the concept/property dim tables only under a checkpoint_dir (a
+    standing-KG build); an increment stages the batch set, never the
+    dims, under its inc_<fingerprint>_ prefix."""
+    tri = fixture_pair["triples"]
+    standing_tri = spark.createDataFrame(tri, TRIPLES_SCHEMA)
+    new_tri = spark.createDataFrame(tri[tri["src"] == "src2"].assign(src="src3"), TRIPLES_SCHEMA)
+
+    def staged(res):
+        return {m["stage"] for m in res["metrics"]}
+
+    standing = run_pipeline(spark, triples=standing_tri)
+    assert staged(standing) == BATCH_STAGES
+    ckpt = PipelineConfig(checkpoint_dir=str(tmp_path / "ckpt"))
+    assert staged(run_pipeline(spark, triples=standing_tri, config=ckpt)) == (
+        BATCH_STAGES | {"concepts", "props"}
+    )
+
+    inc = staged(incremental_update(spark, standing, new_triples=new_tri))
+    split = [re.fullmatch(r"(inc_[0-9a-f]{10}_)(.+)", s) for s in inc]
+    assert all(split)
+    assert len({m.group(1) for m in split}) == 1
+    assert {m.group(2) for m in split} == BATCH_STAGES
 
 
 # -- failure paths under a checkpoint_dir --------------------------------

@@ -219,11 +219,8 @@ def distributed_grads(
                 concept_pool, emb_bc, tp, base, max_types
             ).collect()
         )
-    n_prop_parts = 0
     if prop_pool is not None:
-        prop_parts = prop_pool_partials(prop_pool, tp).collect()
-        n_prop_parts = len(prop_parts)
-        parts.extend(prop_parts)
+        parts.extend(prop_pool_partials(prop_pool, tp).collect())
     dW = np.zeros_like(tp.out_w)
     db = np.zeros_like(tp.out_b)
     dv = np.zeros_like(tp.v)
@@ -241,7 +238,6 @@ def distributed_grads(
         dwp += r["dwp"]
         dwd += r["dwd"]
     B = max(B, 1)
-    _ = n_prop_parts
     return loss / B, (dW / B, db / B, dv / B, dtw / B, dwp / B, dwd / B)
 
 

@@ -5,7 +5,11 @@ The deployment shape this serves: a 10^12-turn corpus has already been
 resolved into a standing KG (run_pipeline / previous increments); a
 new feed (a new ontology, a new transcript source) arrives and must be
 aligned against everything standing. Rerunning the batch pipeline
-scales with the CORPUS; this plan scales with the INCREMENT:
+scales with the CORPUS; an increment scales with the INCREMENT.
+
+There is one KG stage graph (plans/pipeline.py `_build_kg`): a batch
+build is an increment onto the empty KG, and `incremental_update` runs
+the same graph onto the standing KG. It relies on these properties:
 
 - contexts / features / prop-contexts are per-source (subclass and
   property edges never cross sources — reference ontology.py parses
@@ -15,11 +19,8 @@ scales with the CORPUS; this plan scales with the INCREMENT:
   but filtered to pairs touching a new source BEFORE the expensive
   kernel-scoring stage — standing-vs-standing pairs are never
   re-scored;
-- cluster merge runs connected components over the standing
-  (entity -> canon_id) assignments, used as edges, union the newly
-  accepted pairs.  CC(CC(A) union B) == CC(A union B), so a new
-  alignment that bridges two standing clusters merges them exactly as
-  a full rerun would.
+- cluster merge re-closes the standing clusters with the newly
+  accepted pairs, and the KG tables are remapped, not rebuilt.
 
 Because of the per-source context property, the incremental result is
 IDENTICAL to a full batch rerun over the union (same accepted set,
@@ -27,12 +28,14 @@ same cluster partition, same canonical ids, same KG tables) whenever
 the config (threshold, max_types, kernel params) is held fixed —
 pinned by tests/test_incremental.py.
 
-Scale notes: the two source-universe probes below collect DISTINCT
-source names (feed count, not corpus size); a real deployment keeps a
-source registry table instead of deriving it from the corpus. The
-standing dicts returned by run_pipeline carry the concept/prop dim
-tables; when absent (older checkpoints) they are re-derived from the
-standing triples (one linear scan).
+What runs before the graph: the A5 arity pin, the increment's
+fingerprint (which namespaces its stage names), and the source-overlap
+check. The two source-universe probes collect DISTINCT source names
+(feed count, not corpus size); a real deployment keeps a source
+registry table instead of deriving it from the corpus. Standing dicts
+from older runs may lack the concept/prop dim tables, the vocabulary or
+the KG tables; those are re-derived from the standing triples and
+clusters (one corpus scan each).
 """
 
 from __future__ import annotations
@@ -43,18 +46,13 @@ from dataclasses import replace as _dc_replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from veealign_spark.operators import canonicalize, contexts, scoring
-from veealign_spark.plans.pipeline import (
-    KG_TABLES,
+from veealign_spark.operators import canonicalize, scoring
+from veealign_spark.plans.pipeline import (  # noqa: F401 (score_candidates_stage: re-exported)
     PipelineConfig,
-    StageLedger,
-    acceptance_threshold,
-    concept_candidates,
+    _build_kg,
     concepts_from_triples,
-    prop_candidates,
     props_from_triples,
     score_candidates_stage,
-    triples_from_transcripts,
 )
 
 
@@ -74,9 +72,9 @@ def incremental_update(
     """Align new sources against `standing` (a run_pipeline /
     incremental_update result dict, or the same keys re-read from
     materialized tables: triples, contexts, features, prop_contexts,
-    accepted, clusters [, concepts, props]). Returns the same result
-    shape as run_pipeline over the union, plus `new_sources` and
-    `new_triples`."""
+    accepted, clusters [, concepts, props, vocab, kg_triples]). Returns
+    the same result shape as run_pipeline over the union (without
+    `params`), plus `new_sources` and `new_triples`."""
     cfg = config or PipelineConfig()
     # A5 arity must be the STANDING run's: increment feature arrays are
     # unioned with standing features, so a re-derived max_types over
@@ -100,7 +98,6 @@ def incremental_update(
             f"run's max_types={std_mt}; increment features would carry a "
             "different type arity than the standing features they union with"
         )
-    params = cfg.kernel_params()
 
     # increment identity BEFORE any staging: the source set PLUS a
     # content signature (row count + order-independent xxhash64 sum
@@ -141,134 +138,28 @@ def incremental_update(
             f"(in-place source growth changes standing contexts); overlap: {sorted(overlap)}"
         )
 
-    # same stage graph discipline as run_pipeline: every increment
-    # stage is materialized exactly once (lazy localCheckpoint + count,
-    # or parquet + lineage under checkpoint_dir with inc_<fingerprint>_
-    # names so a shared dir resumes both plans exactly), and each
-    # starts as soon as the stages it reads are done. Without staging
-    # the lazy extraction→contexts→scoring DAG re-executes for every
-    # downstream action — the kernel scoring alone runs ~4x (accepted
-    # census, CC edge count, union-find collect, final reads).
-    ledger = StageLedger(spark, cfg.checkpoint_dir)
+    # standing dicts from older runs lack some tables: re-derive them
+    # from the standing triples and clusters
+    base = dict(standing)
+    if base.get("concepts") is None:
+        base["concepts"] = concepts_from_triples(std_triples)
+    if base.get("props") is None:
+        base["props"] = props_from_triples(std_triples)
+    if base.get("vocab") is None:
+        base["vocab"] = scoring.term_universe(std_triples, base["concepts"], label_map)
+    if base.get("kg_triples") is None:
+        base["kg_triples"] = canonicalize.materialize_kg(
+            std_triples, standing["clusters"]
+        )["kg_triples"]
 
-    def union(r, key):  # the standing table union the increment's
-        return standing[key].unionByName(r[key])
-
-    concepts_std = standing.get("concepts")
-    if concepts_std is None:
-        concepts_std = concepts_from_triples(std_triples)
-    props_std = standing.get("props")
-    if props_std is None:
-        props_std = props_from_triples(std_triples)
-
-    # vocabulary: standing vocab (already materialized, vocab-sized)
-    # union the increment's terms — the probe never re-scans the
-    # standing corpus. Set-equal to term_universe over the union, so
-    # scores are unchanged (vectors are looked up by term, not index).
-    # Older standing dicts without a vocab derive it over the union.
-    vocab_std = standing.get("vocab")
-
-    def build_vocab(r):
-        if vocab_std is None:
-            return scoring.term_universe(union(r, "triples"), r["concepts"], label_map)
-        return vocab_std.unionByName(
-            scoring.term_universe(
-                r["triples"], concepts_from_triples(r["triples"]), label_map
-            )
-        ).distinct()
-
-    def build_score_plan(r):
-        return score_candidates_stage(
-            spark, cfg, params, union(r, "triples"), r["concepts"],
-            union(r, "features"), union(r, "prop_contexts"), r["candidates"],
-            prop_candidates(r["props"], touch_sources=new_srcs),
-            label_map=label_map, terms=r["vocab"],
-        )
-
-    # cluster merge: standing assignments are already the CC of the
-    # standing accepted edges; re-closing them with the new edges is
-    # equivalent to CC over the full accepted set
-    def build_clusters(r):
-        edges = (
-            standing["clusters"]
-            .select(F.col("entity").alias("ent1"), F.col("canon_id").alias("ent2"))
-            .unionByName(
-                r["alignments"].filter(F.col("accepted")).select("ent1", "ent2")
-            )
-        )
-        return canonicalize.connected_components(edges)
-
-    # KG materialization: remap the STANDING canonical tables through
-    # the (old_canon -> new_canon) merge map + union the increment's
-    # rows — O(|KG| + increment), never re-deduplicating the corpus
-    # (materialize_kg_delta docstring has the merge-only argument).
-    def build_kg(r):
-        standing_kg = standing.get("kg_triples")
-        if standing_kg is None:  # older standing dicts without KG tables
-            return canonicalize.materialize_kg(union(r, "triples"), r["clusters"])
-        return canonicalize.materialize_kg_delta(
-            standing_kg, standing["clusters"], r["clusters"], r["triples"]
-        )
-
-    # linear stages (contexts, features, prop_contexts) run over the
-    # increment only
-    res = ledger.run({
-        "triples": ((), lambda r: (
-            new_triples if new_triples is not None
-            else triples_from_transcripts(new_transcripts)
-        )),
-        "contexts": (("triples",), lambda r: contexts.build_contexts(
-            r["triples"], bag_of_neighbours=cfg.bag_of_neighbours,
-            max_pathlen=cfg.max_pathlen,
-        )),
-        "features": (("contexts",), lambda r: contexts.assemble_features(
-            r["contexts"], cfg.max_types, cfg.max_paths, cfg.max_pathlen
-        )),
-        "prop_contexts": (("triples",), lambda r: contexts.build_prop_contexts(r["triples"])),
-        "concepts": (("triples",), lambda r: concepts_std.unionByName(
-            concepts_from_triples(r["triples"])
-        ), False),
-        "props": (("triples",), lambda r: props_std.unionByName(
-            props_from_triples(r["triples"])
-        ), False),
-        "vocab": (("triples", "concepts"), build_vocab),
-        # candidates restricted to pairs touching a new source
-        "candidates": (("contexts", "concepts"), lambda r: concept_candidates(
-            cfg, r["concepts"], union(r, "contexts"), touch_sources=new_srcs
-        )),
-        "score_plan": (
-            ("triples", "concepts", "props", "features", "prop_contexts",
-             "vocab", "candidates"),
-            build_score_plan, False,
-        ),
-        "scores": (("score_plan",), lambda r: r["score_plan"][0]),
-        "threshold": (("scores",), lambda r: acceptance_threshold(
-            params, r["scores"], gold
-        ), False),
-        "alignments": (("scores", "threshold"), lambda r: r["scores"].withColumn(
-            "accepted", F.col("score") >= F.lit(r["threshold"])
-        )),
-        "clusters": (("alignments",), build_clusters),
-        "kg": (("triples", "clusters"), build_kg, False),
-        **{k: (("kg",), lambda r, k=k: r["kg"][k]) for k in KG_TABLES},
-    }, prefix=f"{inc}_")
-    _, vector_mode, timings = res["score_plan"]
-    return {
-        **{k: union(res, k) for k in ("triples", "contexts", "features", "prop_contexts")},
-        **{k: res[k] for k in (
-            "concepts", "props", "vocab", "candidates", "scores", "alignments",
-            "clusters", "threshold", *KG_TABLES,
-        )},
-        "new_triples": res["triples"],
-        "accepted": standing["accepted"].unionByName(
-            res["alignments"].filter(F.col("accepted"))
-        ),
-        "vector_mode": vector_mode,
-        "unstaged_timings": timings,
-        "metrics": ledger.metrics,
-        "new_sources": new_srcs,
-        "max_types": cfg.max_types,
-    }
+    # stage names carry the inc_<fingerprint>_ prefix, so a shared
+    # checkpoint_dir resumes the batch build and each increment exactly
+    res, new = _build_kg(
+        spark, cfg, base, new_transcripts, new_triples, gold, label_map,
+        touch_sources=new_srcs, prefix=f"{inc}_",
+    )
+    del res["params"]
+    return {**res, "new_triples": new, "new_sources": new_srcs}
 
 
 def incremental_remove(

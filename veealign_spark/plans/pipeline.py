@@ -5,15 +5,17 @@ contexts (A1-A5, G1-G2) -> candidates (J1'/J2, cross or blocked+salted)
 -> dual-attention scoring (K1-K9 pandas UDF) -> threshold (P6) ->
 connected components (G3) -> canonical kg_* tables + lineage/metrics.
 
-The stages are declared as one dependency graph, `{name: (deps,
-build)}`, and `StageLedger.run` schedules it: each stage starts as
-soon as the stages it reads have finished, so independent jobs
-(contexts beside prop_contexts and the corpus-wide vocabulary
-distinct; the three kg_* tables) back-fill the executors each other's
-stage tails leave idle. On the first failure nothing new starts, the
-stages already running finish, metrics.json is written and the
-original exception reaches the caller, so no Spark job is left running
-and a re-run resumes exactly the stages that finished.
+The stages are declared once, as one dependency graph over a base KG
+(`_build_kg`): a batch build (`run_pipeline`) is an increment onto the
+empty KG, and `plans/incremental.py` runs the same graph onto a
+standing KG. `StageLedger.run` schedules it: each stage starts as soon
+as the stages it reads have finished, so independent jobs (contexts
+beside prop_contexts and the vocabulary distinct; the three kg_*
+tables) back-fill the executors each other's stage tails leave idle.
+On the first failure nothing new starts, the stages already running
+finish, metrics.json is written and the original exception reaches the
+caller, so no Spark job is left running and a re-run resumes exactly
+the stages that finished.
 
 Resumability (north_rule): every stage boundary can snapshot to
 parquet under checkpoint_dir/stage=<name> (Iceberg snapshots on a real
@@ -327,14 +329,14 @@ def score_candidates_stage(
     terms: DataFrame | None = None,
 ):
     """Vocabulary routing + JVM-side encode + dual-attention kernel
-    scoring for concept and property candidates. Shared by the batch
-    pipeline and the incremental-ingest plan (plans/incremental.py).
-    Returns (scores, resolved_vector_mode, timings).
+    scoring for concept and property candidates: the score_plan node
+    of the KG stage graph (`_build_kg`), for a batch build and an
+    increment alike. Returns (scores, resolved_vector_mode, timings).
 
-    `terms` is the vocabulary (scoring.term_universe): both plans stage
-    it, so the corpus-wide distinct runs beside the contexts stage and
-    the probe here reads a materialized table; without it the
-    vocabulary is derived from `triples` and `concepts`.
+    `terms` is the vocabulary (scoring.term_universe): the graph stages
+    it, so its distinct runs beside the contexts stage and the probe
+    here reads a materialized table; without it the vocabulary is
+    derived from `triples` and `concepts`.
 
     Embedding layout: broadcast (indexer, matrix) vs pre-joined
     distributed dim table (see PipelineConfig.vocab_broadcast_threshold).
@@ -438,6 +440,138 @@ def score_candidates_stage(
     return scores_c.unionByName(scores_p), vector_mode, timings
 
 
+def _build_kg(
+    spark: SparkSession, cfg: PipelineConfig, base: dict,
+    transcripts: DataFrame | None, triples: DataFrame | None,
+    gold: DataFrame | None, label_map: DataFrame | None,
+    concepts: DataFrame | None = None, props: DataFrame | None = None,
+    touch_sources: list[str] | None = None, prefix: str = "",
+) -> tuple[dict, DataFrame]:
+    """The KG stage graph: ingest one batch of `triples` (or of
+    `transcripts`) onto the KG `base`; return (the result dict over
+    base + batch, the batch's staged triples).
+
+    `base` is {} (the empty KG: a batch build) or a standing result
+    dict. The per-source stages run over the batch only. A base
+    changes four things; the empty base takes the batch shape of each:
+    - its tables are unioned into every table the scorers and the
+      result read;
+    - candidates keep the pairs with a side in `touch_sources` (None:
+      all pairs, and the blocked join keeps its batch shape);
+    - clusters re-close the standing (entity -> canon_id) assignments,
+      used as edges, with the new accepted pairs: CC(CC(A) + B) ==
+      CC(A + B), so a bridging alignment merges two standing clusters
+      exactly as a full rerun would;
+    - the KG is the standing tables remapped through the merge plus
+      the batch's rows (materialize_kg_delta).
+
+    Every node but the driver-side ones (params, score_plan, threshold,
+    kg) is staged as `prefix + name`; the concept/property dim tables
+    only on a batch build under a checkpoint_dir (a standing-KG build,
+    whose dims an increment reads back). Otherwise they stay lazy: the
+    extra materializations cost the N->4N spark-submit scaling run ~20 s
+    at the 4N point, where fixed job latency bounds speedup."""
+    ledger = StageLedger(spark, cfg.checkpoint_dir)
+    stage_dims = ledger.root is not None and not base
+
+    def union(key, df):
+        return base[key].unionByName(df) if base else df
+
+    def build_params(r):
+        if cfg.derive_types:
+            # A5 (data_preprocessing.py:318): global max # of non-empty
+            # neighbour types; the kernel's type-mixing weights resize to
+            # match (K7 branch, train.py:256-264)
+            cfg.max_types = max(contexts.derive_max_types(r["contexts"]), 1)
+        return cfg.kernel_params()
+
+    # The vocabulary is staged on every run: its distinct reads only the
+    # batch's triples (and the given concepts), so it runs beside
+    # contexts, and a base's vocabulary is unioned in, never re-scanned.
+    # The derived path skips the concepts subtree: derived concept ids
+    # are a subset of the triples' subj/obj terms. Vectors are looked
+    # up by term, so the union's row order leaves scores unchanged.
+    def build_vocab(r):
+        vocab = scoring.term_universe(r["triples"], concepts, label_map)
+        return base["vocab"].unionByName(vocab).distinct() if base else vocab
+
+    def build_score_plan(r):
+        return score_candidates_stage(
+            spark, cfg, r["params"], union("triples", r["triples"]), r["concepts"],
+            union("features", r["features"]), union("prop_contexts", r["prop_contexts"]),
+            r["candidates"], prop_candidates(r["props"], touch_sources),
+            label_map=label_map, terms=r["vocab"],
+        )
+
+    def build_clusters(r):
+        edges = r["alignments"].filter(F.col("accepted"))
+        if base:
+            edges = base["clusters"].select(
+                F.col("entity").alias("ent1"), F.col("canon_id").alias("ent2")
+            ).unionByName(edges.select("ent1", "ent2"))
+        return canonicalize.connected_components(edges)
+
+    def build_kg(r):
+        if not base:
+            return canonicalize.materialize_kg(r["triples"], r["clusters"])
+        return canonicalize.materialize_kg_delta(
+            base["kg_triples"], base["clusters"], r["clusters"], r["triples"]
+        )
+
+    res = ledger.run({
+        "triples": ((), lambda r: (
+            triples if triples is not None else triples_from_transcripts(transcripts)
+        )),
+        "contexts": (("triples",), lambda r: contexts.build_contexts(
+            r["triples"], bag_of_neighbours=cfg.bag_of_neighbours,
+            max_pathlen=cfg.max_pathlen,
+        )),
+        "prop_contexts": (("triples",), lambda r: contexts.build_prop_contexts(r["triples"])),
+        "vocab": (("triples",), build_vocab),
+        "params": (("contexts",), build_params, False),
+        "features": (("contexts", "params"), lambda r: contexts.assemble_features(
+            r["contexts"], cfg.max_types, cfg.max_paths, cfg.max_pathlen
+        )),
+        "concepts": (("triples",), lambda r: union("concepts", (
+            concepts if concepts is not None else concepts_from_triples(r["triples"])
+        )), stage_dims),
+        "props": (("triples",), lambda r: union("props", (
+            props if props is not None else props_from_triples(r["triples"])
+        )), stage_dims),
+        "candidates": (("contexts", "concepts"), lambda r: concept_candidates(
+            cfg, r["concepts"], union("contexts", r["contexts"]), touch_sources
+        )),
+        "score_plan": (
+            ("params", "triples", "concepts", "features", "prop_contexts",
+             "props", "vocab", "candidates"),
+            build_score_plan, False,
+        ),
+        "scores": (("score_plan",), lambda r: r["score_plan"][0]),
+        "threshold": (("params", "scores"), lambda r: acceptance_threshold(
+            r["params"], r["scores"], gold
+        ), False),
+        "alignments": (("scores", "threshold"), lambda r: r["scores"].withColumn(
+            "accepted", F.col("score") >= F.lit(r["threshold"])
+        )),
+        "clusters": (("alignments",), build_clusters),
+        "kg": (("triples", "clusters"), build_kg, False),
+        **{k: (("kg",), lambda r, k=k: r["kg"][k]) for k in KG_TABLES},
+    }, prefix=prefix)
+    _, vector_mode, timings = res["score_plan"]
+    return {
+        **{k: union(k, res[k]) for k in ("triples", "contexts", "features", "prop_contexts")},
+        **{k: res[k] for k in (
+            "concepts", "props", "vocab", "candidates", "scores", "alignments",
+            "clusters", "params", "threshold", *KG_TABLES,
+        )},
+        "accepted": union("accepted", res["alignments"].filter(F.col("accepted"))),
+        "metrics": ledger.metrics,
+        "max_types": cfg.max_types,
+        "vector_mode": vector_mode,
+        "unstaged_timings": timings,
+    }, res["triples"]
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame | None = None,
@@ -448,7 +582,8 @@ def run_pipeline(
     props: DataFrame | None = None,
     label_map: DataFrame | None = None,
 ) -> dict:
-    """Full pipeline. Returns dict of result DataFrames + metrics.
+    """Full pipeline: the KG stage graph over the empty KG. Returns dict
+    of result DataFrames + metrics.
 
     Two entry shapes:
     - transcripts=... : mentions are extracted and staged into triples
@@ -463,96 +598,9 @@ def run_pipeline(
     validation-tuned threshold, train.py:608-611) instead of the
     config-pinned value; the tuned value is returned in the result.
     """
-    cfg = config or PipelineConfig()
-    ledger = StageLedger(spark, cfg.checkpoint_dir)
     if triples is None and transcripts is None:
         raise ValueError("run_pipeline needs transcripts or triples")
-
-    def build_params(r):
-        if cfg.derive_types:
-            # A5 (data_preprocessing.py:318): global max # of non-empty
-            # neighbour types; the kernel's type-mixing weights resize to
-            # match (K7 branch, train.py:256-264)
-            cfg.max_types = max(contexts.derive_max_types(r["contexts"]), 1)
-        return cfg.kernel_params()
-
-    # The entity-universe-sized concept/property dim tables are STAGED
-    # (so the incremental plan can reuse them from the standing dict)
-    # only when a checkpoint_dir marks this run as a standing-KG build;
-    # for a one-shot job they stay lazy — the extra materializations
-    # cost the N->4N spark-submit scaling run ~20 s at the 4N point,
-    # where fixed job latency bounds speedup.
-    stage_dims = ledger.root is not None
-
-    def build_score_plan(r):
-        return score_candidates_stage(
-            spark, cfg, r["params"], r["triples"], r["concepts"], r["features"],
-            r["prop_contexts"], r["candidates"], prop_candidates(r["props"]),
-            label_map=label_map, terms=r["vocab"],
-        )
-
-    res = ledger.run({
-        "triples": ((), lambda r: (
-            triples if triples is not None else triples_from_transcripts(transcripts)
-        )),
-        "contexts": (("triples",), lambda r: contexts.build_contexts(
-            r["triples"], bag_of_neighbours=cfg.bag_of_neighbours,
-            max_pathlen=cfg.max_pathlen,
-        )),
-        "prop_contexts": (("triples",), lambda r: contexts.build_prop_contexts(r["triples"])),
-        # The vocabulary is staged on every run: its corpus-wide
-        # distinct reads only the triples (and the given concepts), so
-        # it runs beside contexts and the bounded probe in
-        # score_candidates_stage reads the staged table. On the derived
-        # path it skips the concepts subtree entirely: derived concept
-        # ids are subclass/property endpoints, i.e. a subset of the
-        # triples' subj/obj terms already in the universe.
-        "vocab": (("triples",), lambda r: scoring.term_universe(
-            r["triples"], concepts, label_map
-        )),
-        "params": (("contexts",), build_params, False),
-        "features": (("contexts", "params"), lambda r: contexts.assemble_features(
-            r["contexts"], cfg.max_types, cfg.max_paths, cfg.max_pathlen
-        )),
-        "concepts": (("triples",), lambda r: (
-            concepts if concepts is not None else concepts_from_triples(r["triples"])
-        ), stage_dims),
-        "props": (("triples",), lambda r: (
-            props if props is not None else props_from_triples(r["triples"])
-        ), stage_dims),
-        "candidates": (("contexts", "concepts"), lambda r: concept_candidates(
-            cfg, r["concepts"], r["contexts"]
-        )),
-        "score_plan": (
-            ("params", "triples", "concepts", "features", "prop_contexts",
-             "props", "vocab", "candidates"),
-            build_score_plan, False,
-        ),
-        "scores": (("score_plan",), lambda r: r["score_plan"][0]),
-        "threshold": (("params", "scores"), lambda r: acceptance_threshold(
-            r["params"], r["scores"], gold
-        ), False),
-        "alignments": (("scores", "threshold"), lambda r: r["scores"].withColumn(
-            "accepted", F.col("score") >= F.lit(r["threshold"])
-        )),
-        "clusters": (("alignments",), lambda r: canonicalize.connected_components(
-            r["alignments"].filter(F.col("accepted"))
-        )),
-        "kg": (("triples", "clusters"), lambda r: canonicalize.materialize_kg(
-            r["triples"], r["clusters"]
-        ), False),
-        **{k: (("kg",), lambda r, k=k: r["kg"][k]) for k in KG_TABLES},
-    })
-    _, vector_mode, timings = res["score_plan"]
-    return {
-        **{k: res[k] for k in (
-            "triples", "contexts", "features", "prop_contexts", "concepts",
-            "props", "vocab", "candidates", "scores", "alignments", "clusters",
-            "params", "threshold", *KG_TABLES,
-        )},
-        "accepted": res["alignments"].filter(F.col("accepted")),
-        "metrics": ledger.metrics,
-        "max_types": cfg.max_types,
-        "vector_mode": vector_mode,
-        "unstaged_timings": timings,
-    }
+    return _build_kg(
+        spark, config or PipelineConfig(), {}, transcripts, triples, gold, label_map,
+        concepts, props,
+    )[0]
